@@ -150,6 +150,13 @@ def run_lakehouse_step(
     deletion vectors are exactly the O(changed rows) path a 100 TB
     streaming table needs), else ``cow``.  The step's hydrated
     ``batch_id`` rides into the exactly-once ledger on every form.
+
+    Keyed merges (upsert, keyed update, keyed delete) prune by key
+    range: the first key column bounds the batch, and only the base and
+    delta files whose recorded [min, max] overlaps it are read and
+    joined.  That is exact, since every image of a key shares its key
+    value.  The files these merges write record [min, max] stats for
+    the key columns, so later steps can skip them too.
     """
     t = catalog.table(spec.target_table)
     batch_id = _hydrate_batch_id(spec.batch_id, ph)
@@ -187,6 +194,8 @@ def run_lakehouse_step(
             key_columns=keys,
             clauses=[("update", None, payload), ("insert", None, "*")],
             batch_id=batch_id,
+            stats_cols=keys,
+            prune_col=keys[0],
             mode=mode,
         )
     elif op == "update":
@@ -212,6 +221,8 @@ def run_lakehouse_step(
                 key_columns=keys,
                 clauses=[("update", None, payload)],
                 batch_id=batch_id,
+                stats_cols=keys,
+                prune_col=keys[0],
                 mode=mode,
             )
     elif op == "delete":
@@ -225,6 +236,8 @@ def run_lakehouse_step(
                 key_columns=[key],
                 clauses=[("delete", None, None)],
                 batch_id=batch_id,
+                stats_cols=[key],
+                prune_col=key,
                 mode=mode,
             )
     elif op in ("append", "overwrite"):

@@ -4247,6 +4247,27 @@ class ManifestTable:
             return False
         return False
 
+    def _has_prune_stats(self, m: dict, col: str) -> bool:
+        """True when some base or delta file records stats that
+        :meth:`_overlaps` can use to skip it for ``col`` — its own
+        [min, max], or a recognized generated counterpart's.  Without
+        any, every file overlaps every range, so a MERGE skips the
+        bounds job on its source instead of paying for nothing."""
+        forms = self._gen_forms(m)
+        cols = {col}
+        if col in forms:
+            cols.add(forms[col][0])
+        cols |= {
+            g for g, (src, kind, _p) in forms.items()
+            if src == col and kind != "mod"
+        }
+        want = {self._stat_key(m, c) for c in cols}
+        stats = m.get("stats", {})
+        deltas = [f for fs in m.get("deltas", []) for f in fs]
+        return any(
+            want & stats.get(f, {}).keys() for f in m["files"] + deltas
+        )
+
     def _overlaps(self, m: dict, name: str, col: str, lo, hi) -> bool:
         """True when file ``name`` may contain rows with col in [lo, hi]
         — missing stats mean 'unknown' and the file is kept (pruning
@@ -6228,9 +6249,12 @@ class ManifestTable:
         expression when one is declared; generated columns must be
         explicitly assigned in a merge, their join-context derivation
         is ambiguous), cast to the tracked type.
-        Returns ``(j, proj, tcols, typ, upd_codes, del_codes,
-        ins_codes)`` where ``j`` carries the aliased join and ``proj``
-        the action-tagged content projection."""
+        Returns ``(proj, tcols, typ, upd_codes, del_codes, ins_codes)``
+        where ``proj`` is the action-tagged content projection.  It
+        also carries the old target row as the struct ``__t__`` and
+        the acted key (target key, else source key) as the struct
+        ``__s__``, so one slice of ``proj`` answers every later read of
+        the join."""
         from pyspark.sql import functions as F
 
         tcols = list(t_base.columns)
@@ -6323,7 +6347,17 @@ class ManifestTable:
             if k == "insert"
         ]
         proj = j.select(
-            F.col("__act__"), *[_content_col(c) for c in tcols]
+            F.col("__act__"),
+            F.struct(*[F.col(f"t.{c}").alias(c) for c in tcols]).alias(
+                "__t__"
+            ),
+            F.struct(
+                *[
+                    F.coalesce(F.col(f"t.{k}"), F.col(f"s.{k}")).alias(k)
+                    for k in keys
+                ]
+            ).alias("__s__"),
+            *[_content_col(c) for c in tcols],
         )
         # generated columns recompute from the POST values on every
         # updated/inserted row — kept rows keep their stored value
@@ -6342,40 +6376,35 @@ class ManifestTable:
                         F.expr(gens[g]).cast(typ[g]),
                     ).otherwise(F.col(g)),
                 )
-        return j, proj, tcols, typ, upd_codes, del_codes, ins_codes
+        return proj, tcols, typ, upd_codes, del_codes, ins_codes
 
-    def _merge_cdc(self, j, proj, tcols, upd_codes, del_codes, ins_codes):
+    def _merge_cdc(self, proj, tcols, upd_codes, del_codes, ins_codes):
         """The commit's exact row-level change set as typed CDC
         (``update_preimage``/``update_postimage``, full-row ``delete``,
         ``insert`` — the Delta CDF vocabulary), assembled from the
-        shared merge plan."""
+        shared merge plan's projection (or a slice of it)."""
         from pyspark.sql import functions as F
 
-        t_star = [F.col(f"t.{c}").alias(c) for c in tcols]
+        pre = proj.select(
+            "__act__", *[F.col("__t__")[c].alias(c) for c in tcols]
+        )
+        post = proj.drop("__t__", "__s__")
+
+        def _typed(df, codes, kind):
+            return (
+                df.filter(F.col("__act__").isin(codes))
+                .drop("__act__")
+                .withColumn(self._CT, F.lit(kind))
+            )
+
         cdc_parts = []
         if upd_codes:
-            pre = j.filter(F.col("__act__").isin(upd_codes)).select(*t_star)
-            post = proj.filter(F.col("__act__").isin(upd_codes)).drop(
-                "__act__"
-            )
-            cdc_parts.append(
-                pre.withColumn(self._CT, F.lit("update_preimage"))
-            )
-            cdc_parts.append(
-                post.withColumn(self._CT, F.lit("update_postimage"))
-            )
+            cdc_parts.append(_typed(pre, upd_codes, "update_preimage"))
+            cdc_parts.append(_typed(post, upd_codes, "update_postimage"))
         if del_codes:
-            cdc_parts.append(
-                j.filter(F.col("__act__").isin(del_codes))
-                .select(*t_star)
-                .withColumn(self._CT, F.lit("delete"))
-            )
+            cdc_parts.append(_typed(pre, del_codes, "delete"))
         if ins_codes:
-            cdc_parts.append(
-                proj.filter(F.col("__act__").isin(ins_codes))
-                .drop("__act__")
-                .withColumn(self._CT, F.lit("insert"))
-            )
+            cdc_parts.append(_typed(post, ins_codes, "insert"))
         cdc = cdc_parts[0]
         for p in cdc_parts[1:]:
             cdc = cdc.unionByName(p)
@@ -6515,13 +6544,13 @@ class ManifestTable:
             touched = list(m["files"])
         elif m["files"]:
             cands = list(m["files"])
-            if prune_col is not None:
-                if prune_col not in keys:
-                    raise ValueError(
-                        f"prune_col {prune_col!r} must be a key column "
-                        f"{keys} — pruning on a non-key column could "
-                        "split a key's rows across kept and pruned files"
-                    )
+            if prune_col is not None and prune_col not in keys:
+                raise ValueError(
+                    f"prune_col {prune_col!r} must be a key column "
+                    f"{keys} — pruning on a non-key column could "
+                    "split a key's rows across kept and pruned files"
+                )
+            if prune_col is not None and self._has_prune_stats(m, prune_col):
                 bounds = self._collect_index_metadata(
                     src.agg(
                         F.min(prune_col).alias("lo"),
@@ -6599,25 +6628,24 @@ class ManifestTable:
         if (matched_idx or by_source_idx) and touched:
             self._merge_ambiguity_guard(src, t_base, keys)
         # -- phase 2: one full-outer join, one action column -------------
-        j, proj, tcols, _typ, upd_codes, del_codes, ins_codes = (
+        proj, tcols, _typ, upd_codes, del_codes, ins_codes = (
             self._merge_plan(
                 parsed, t_base, src, keys,
                 defaults=m.get("column_defaults"),
                 identity=set(m.get("identity_cols") or {}),
             )
         )
+        content = proj.drop("__t__", "__s__")
         keep_codes = ["keep"] + upd_codes + ins_codes
-        new_content = proj.filter(
+        new_content = content.filter(
             F.col("__act__").isin(keep_codes)
         ).drop("__act__")
-        novel = proj.filter(
+        novel = content.filter(
             F.col("__act__").isin(upd_codes + ins_codes)
         ).drop("__act__")
         self._validate_constraints(m, novel, what)
         # -- typed CDC (the commit's exact change set) --------------------
-        cdc = self._merge_cdc(
-            j, proj, tcols, upd_codes, del_codes, ins_codes
-        )
+        cdc = self._merge_cdc(proj, tcols, upd_codes, del_codes, ins_codes)
         # -- write + commit (the _dml_where protocol) ---------------------
         bloom = m.get("bloom_cols", [])
         carry_map = self._carry_mapping(m)
@@ -6785,16 +6813,17 @@ class ManifestTable:
                     f"{keys} — pruning on a non-key column could "
                     "split a key's rows across kept and pruned files"
                 )
-            bounds = self._collect_index_metadata(
-                src.agg(
-                    F.min(prune_col).alias("lo"),
-                    F.max(prune_col).alias("hi"),
+            if self._has_prune_stats(m, prune_col):
+                bounds = self._collect_index_metadata(
+                    src.agg(
+                        F.min(prune_col).alias("lo"),
+                        F.max(prune_col).alias("hi"),
+                    )
                 )
-            )
-            lo = bounds.column("lo").to_pylist()[0]
-            hi = bounds.column("hi").to_pylist()[0]
-            if lo is not None:
-                prune = (prune_col, lo, hi)
+                lo = bounds.column("lo").to_pylist()[0]
+                hi = bounds.column("hi").to_pylist()[0]
+                if lo is not None:
+                    prune = (prune_col, lo, hi)
         if m.get("row_tracking") and has_content:
             # thread the stable row id through the merge: updates keep
             # the matched target row's id (it rides tcols into the
@@ -6817,11 +6846,6 @@ class ManifestTable:
                 )
             else:
                 t_base = src.limit(0)  # empty untracked table: bootstrap
-        else:
-            # the resolved view (a shuffle + LWW window) feeds three
-            # jobs — the plan join, the CDC write and the ambiguity
-            # guard; materialize its lineage once
-            t_base = t_base.localCheckpoint(eager=False)
         self._merge_check_payloads(
             parsed,
             {f.name: f.dataType for f in t_base.schema.fields},
@@ -6832,20 +6856,24 @@ class ManifestTable:
         )
         if (matched_idx or by_source_idx) and has_content:
             self._merge_ambiguity_guard(src, t_base, keys)
-        j, proj, tcols, _typ, upd_codes, del_codes, ins_codes = (
+        proj, tcols, _typ, upd_codes, del_codes, ins_codes = (
             self._merge_plan(
                 parsed, t_base, src, keys,
                 defaults=m.get("column_defaults"),
                 identity=set(m.get("identity_cols") or {}),
             )
         )
-        novel = proj.filter(
+        # dv mode writes acted rows only, never keep/drop ones: run the
+        # join once into that batch-sized slice, which the suppression
+        # keys, the post images and the CDC then all read
+        acted = proj.filter(
+            F.col("__act__").isin(upd_codes + del_codes + ins_codes)
+        ).localCheckpoint(eager=False)
+        novel = acted.filter(
             F.col("__act__").isin(upd_codes + ins_codes)
-        ).drop("__act__")
+        ).drop("__act__", "__t__", "__s__")
         self._validate_constraints(m, novel, what)
-        cdc = self._merge_cdc(
-            j, proj, tcols, upd_codes, del_codes, ins_codes
-        )
+        cdc = self._merge_cdc(acted, tcols, upd_codes, del_codes, ins_codes)
         # -- the suppression set: every stored image of an acted key ----
         # updates/deletes always suppress; inserts only need to when
         # deltas are outstanding (a tombstone or LWW-shadowed stale
@@ -6858,13 +6886,8 @@ class ManifestTable:
         dv_meta: dict = {}
         if sup_codes and has_content:
             skeys = (
-                j.filter(F.col("__act__").isin(sup_codes))
-                .select(
-                    *[
-                        F.coalesce(F.col(f"t.{k}"), F.col(f"s.{k}")).alias(k)
-                        for k in keys
-                    ]
-                )
+                acted.filter(F.col("__act__").isin(sup_codes))
+                .select(*[F.col("__s__")[k].alias(k) for k in keys])
                 .distinct()
             )
             base_cands = [

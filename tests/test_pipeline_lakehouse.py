@@ -8,7 +8,10 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from pypeline_spark.pipeline.lakehouse import LakehouseCatalog
+from pypeline_spark.pipeline.lakehouse import (
+    LakehouseCatalog,
+    run_lakehouse_step,
+)
 from pypeline_spark.pipeline.runner import Pypeline
 from pypeline_spark.pipeline.spec import PipelineConfig, PypeSpec, SpecError
 from pypeline_spark.session import register_tables
@@ -312,3 +315,141 @@ class TestLakehouseSpecValidation:
                 name="x", extract_query="SELECT 1", target_table="t",
                 type="append", batch_id="a-1",
             )
+
+
+
+class TestKeyRangePruning:
+    """Keyed lakehouse steps prune their MERGE by the first key column's
+    range and write key stats on the files they add.  Pruning must be
+    exact on a messy table: dv-deleted rows, an outstanding delta with
+    a tombstone, and post-image files of an earlier step."""
+
+    @staticmethod
+    def _df(spark, keys, tag):
+        return spark.createDataFrame(
+            [(k // 50, k, f"{tag}{k}") for k in keys],
+            "g long, k long, v string",
+        )
+
+    def _step(self, spark, cat, op, keys, batch, tag, exp):
+        """Run one keyed step on table ``t`` and apply its semantics to
+        the expected rows ``exp`` (keyed by ``k``)."""
+        batch = list(batch)
+        kw = (
+            {"identifier": keys[0]} if op == "delete"
+            else {"key_columns": keys}
+        )
+        spec = PypeSpec(
+            name=op, extract_query="SELECT 1", target_table="t",
+            type="lakehouse", lakehouse_op=op, batch_id=f"{op}-{tag}", **kw,
+        )
+        run_lakehouse_step(spark, cat, spec, self._df(spark, batch, tag), {})
+        for k in batch:
+            if op == "delete":
+                exp.pop(k, None)
+            elif op == "upsert" or k in exp:
+                exp[k] = {"g": k // 50, "k": k, "v": f"{tag}{k}"}
+
+    def _messy(self, spark, root, keys):
+        """Keys 0..399 minus the gap 100..139, range-partitioned over 8
+        base files with key stats; every k % 10 == 7 dv-deleted; a
+        delta re-upserting 60..69, adding the delta-only key 120 and
+        tombstoning 50; then an upsert step's post images for 200..209.
+        Returns the catalog and the expected resolved rows."""
+        cat = LakehouseCatalog(str(root))
+        t = cat.table("t")
+        seeded = [k for k in range(400) if not 100 <= k < 140]
+        t.commit_overwrite(
+            self._df(spark, seeded, "s").repartitionByRange(8, "g", "k"),
+            batch_id="seed", stats_cols=keys,
+        )
+        t.delete_where(spark, "k % 10 = 7", batch_id="trim", mode="dv")
+        redo = [k for k in range(60, 70) if k % 10 != 7] + [120]
+        t.commit_delta(
+            self._df(spark, redo, "d"), keys, batch_id="redo",
+            stats_cols=keys,
+            deletes=spark.createDataFrame([(1, 50)], "g long, k long"),
+        )
+        exp = {
+            k: {"g": k // 50, "k": k, "v": f"s{k}"}
+            for k in seeded if k % 10 != 7 and k != 50
+        }
+        exp.update({k: {"g": k // 50, "k": k, "v": f"d{k}"} for k in redo})
+        self._step(spark, cat, "upsert", keys, range(200, 210), "p", exp)
+        return cat, exp
+
+    @pytest.mark.parametrize(
+        "keys", [["k"], ["g", "k"]], ids=["single", "composite"]
+    )
+    def test_pruned_steps_match_model_and_unpruned(
+        self, spark, tmp_path, monkeypatch, keys
+    ):
+        import shutil
+
+        cat, exp = self._messy(spark, tmp_path / "pruned", keys)
+        shutil.copytree(tmp_path / "pruned", tmp_path / "blind")
+        blind = LakehouseCatalog(str(tmp_path / "blind"))
+        # every manifest read of the copy sees no file stats, so its
+        # merges take the unpruned path
+        bt = blind.table("t")
+        read = bt._read_manifest
+        monkeypatch.setattr(
+            bt, "_read_manifest", lambda: {**read(), "stats": {}}
+        )
+        plan = [
+            # base keys, the gap 100..139 (inserts), the dv-deleted
+            # keys 107/117 and the delta-only key 120
+            ("upsert", range(95, 125), "u"),
+            # post-image keys 205..209, base keys 210..214, absent 500
+            ("update", list(range(205, 215)) + [500], "w"),
+            ("delete", list(range(300, 310)) + [1000], "x"),
+            # the tombstoned key 50 and its neighbour
+            ("upsert", [50, 51], "y"),
+        ]
+        if len(keys) > 1:
+            # a keyed delete names one identifier column, and a delta'd
+            # table only merges on its full recorded key
+            plan = [p for p in plan if p[0] != "delete"]
+        for op, batch, tag in plan:
+            self._step(spark, cat, op, keys, batch, tag, exp)
+            self._step(spark, blind, op, keys, batch, tag, {})
+
+        def resolved(c):
+            return sorted(map(tuple, c.get(spark, "t").collect()))
+
+        got = resolved(cat)
+        assert got == sorted((r["g"], r["k"], r["v"]) for r in exp.values())
+        assert resolved(blind) == got
+
+    def test_step_reads_only_overlapping_base_files(
+        self, spark, tmp_path, monkeypatch
+    ):
+        cat, _exp = self._messy(spark, tmp_path, ["k"])
+        t = cat.table("t")
+        m0 = t._read_manifest()
+        base = m0["files"]
+        lo, hi = 95, 124
+        want = {
+            f for f in base
+            if m0["stats"][f]["k"][0] <= hi and m0["stats"][f]["k"][1] >= lo
+        }
+        assert 0 < len(want) < len(base)
+        seen = set()
+        for name in ("_read_base", "_read_base_tagged"):
+            orig = getattr(t, name)
+
+            def spy(spark_, m, names, *a, _orig=orig, **kw):
+                seen.update(f for f in names if f in base)
+                return _orig(spark_, m, names, *a, **kw)
+
+            monkeypatch.setattr(t, name, spy)
+        self._step(spark, cat, "upsert", ["k"], range(lo, hi + 1), "u", {})
+        m1 = t._read_manifest()
+        assert m1["version"] == m0["version"] + 1
+        assert seen and seen <= want
+        # the post images record their key range in the manifest
+        added = [f for f in m1["files"] if f not in base]
+        assert added
+        for f in added:
+            flo, fhi = m1["stats"][f]["k"]
+            assert lo <= flo <= fhi <= hi
