@@ -22,6 +22,7 @@ from __future__ import annotations
 
 import argparse
 import os
+import re
 import sys
 
 
@@ -70,8 +71,8 @@ def _register_source_jdbc(spark, url: str, driver: str | None) -> list[str]:
     out = []
     for t in sorted(names):
         view = t.lower()
-        if view == "pypeline_applied_batches" or view.endswith("__stage"):
-            continue  # engine bookkeeping, not source data
+        if view == "pypeline_applied_batches" or re.search(r"__stage(_\w+)?$", view):
+            continue  # engine bookkeeping (ledger, stage tables), not source data
         read_source(
             spark, "jdbc", url, options={**opts_base, "dbtable": t}
         ).createOrReplaceTempView(view)

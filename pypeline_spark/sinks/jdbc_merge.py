@@ -252,6 +252,20 @@ class JdbcMergeCatalog:
         )
 
     def put(self, name: str, df: DataFrame) -> None:
+        """Replace the table with ``df``.  A read-modify-write value
+        (append, cdc, dedup) lazily reads the table it replaces, and
+        JDBC overwrite drops that table before the write scans it — so
+        an existing table is replaced from a materialized stage copy.
+        A failed copy leaves the stage standing: it then holds the only
+        complete copy of the new value."""
+        if not self._table_exists(name):
+            self._write(name, df)
+            return
+        stage = self._stage(name, df)
+        self._write(name, self.get(stage))
+        self._drop_stage(stage)
+
+    def _write(self, name: str, df: DataFrame) -> None:
         write_sink(
             df, "jdbc", self.url, mode="overwrite", options=self._opts(name), bulk_size=self.bulk_size
         )
@@ -283,9 +297,7 @@ class JdbcMergeCatalog:
 
             digest = hashlib.sha1(f"{name}|{suffix}".encode()).hexdigest()[:12]
             stage = f"{name[:100]}__stage_{digest}"
-        write_sink(
-            df, "jdbc", self.url, mode="overwrite", options=self._opts(stage), bulk_size=self.bulk_size
-        )
+        self._write(stage, df)
         return stage
 
     @staticmethod

@@ -149,6 +149,46 @@ def delete_by_keys(
     return target.join(keys, [identifier], "left_anti")
 
 
+def dedup_ingest(
+    target: Optional[DataFrame],
+    batch: DataFrame,
+    key: str,
+    text_column: str,
+    method: str = "exact",
+) -> DataFrame:
+    """Append the batch rows that duplicate nothing already ingested.
+
+    ``exact`` drops rows whose normalized-text fingerprint (md5 of the
+    trimmed, lower-cased ``text_column``) matches a standing target
+    row, and keeps the smallest ``key`` among batch rows sharing one.
+    ``minhash`` drops rows that near-duplicate the standing target
+    (:func:`incremental_near_dups`).  Returns the target's new value:
+    the standing rows plus the survivors, or the survivors alone when
+    there is no target yet.
+    """
+    if method == "exact":
+        fp = F.md5(F.lower(F.trim(F.col(text_column))))
+        fps = batch.withColumn("__fp", fp)
+        keep = fps.groupBy("__fp").agg(F.min(key).alias("__keep"))
+        fps = fps.join(keep, "__fp").filter(F.col(key) == F.col("__keep")).drop("__keep")
+        if target is not None:
+            seen = target.select(fp.alias("__fp")).distinct()
+            fps = fps.join(seen, "__fp", "left_anti")
+        survivors = fps.drop("__fp")
+    elif target is not None:
+        from pypeline_spark.functions.dedup import incremental_near_dups
+
+        dups = (
+            incremental_near_dups(target, batch, id_col=key)
+            .select(F.col("new_id").alias(key))
+            .distinct()
+        )
+        survivors = batch.join(dups, key, "left_anti")
+    else:
+        survivors = batch
+    return survivors if target is None else target.unionByName(survivors)
+
+
 class MemoryCatalog:
     """Target 'database' as named in-memory DataFrames (test harness).
 

@@ -184,3 +184,20 @@ def test_parquet_catalog_pinned_session_survives_active_clone(spark, tmp_path):
         assert spark.catalog.tableExists("t_pinned_view")
     finally:
         jvm_ss.setActiveSession(spark._jsparkSession)
+
+
+def test_source_jdbc_skips_leftover_stage_tables(spark, tmp_path):
+    """A stage table a killed run left behind (``{name}__stage_{suffix}``)
+    is engine bookkeeping, not a source table: it gets no view."""
+    from pypeline_spark.__main__ import _register_source_jdbc
+    from pypeline_spark.sinks.jdbc_merge import JdbcMergeCatalog
+
+    derby_driver = "org.apache.derby.jdbc.EmbeddedDriver"
+    url = f"jdbc:derby:{tmp_path}/srcdb;create=true"
+    cat = JdbcMergeCatalog(spark, url, driver=derby_driver)
+    rows = spark.createDataFrame([(1, 2.0)], "id bigint, bal double")
+    cat.put("customers", rows)
+    stages = [cat._stage("customers", rows), cat._stage("customers", rows, batch_id="b-1")]
+    assert _register_source_jdbc(spark, url, derby_driver) == ["customers"]
+    for stage in stages:
+        assert not spark.catalog.tableExists(stage.lower())

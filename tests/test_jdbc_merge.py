@@ -31,6 +31,20 @@ def _rows(df):
     )
 
 
+def _tables(cat):
+    """Names of the user tables in the catalog's database."""
+    conn = cat._connect()
+    try:
+        rs = conn.getMetaData().getTables(None, "APP", "%", None)
+        names = []
+        while rs.next():
+            names.append(rs.getString("TABLE_NAME"))
+        rs.close()
+        return names
+    finally:
+        conn.close()
+
+
 @pytest.fixture()
 def target(spark):
     # note the NULL in the excluded column 'note' for key 2: an upsert
@@ -255,6 +269,61 @@ class TestRunnerDelegation:
         before = _rows(jdbc_cat.get("acct"))
         Pypeline(spark, config, catalog=jdbc_cat).run("p")
         assert _rows(jdbc_cat.get("acct")) == before
+
+    def test_read_modify_write_steps_keep_existing_rows(self, spark, tmp_path):
+        """append and cdc steps read the target they replace; the
+        database must end where the in-memory catalog does instead of
+        losing the rows the overwrite dropped before reading them."""
+        from pypeline_spark.pipeline.runner import Pypeline
+        from pypeline_spark.pipeline.spec import PipelineConfig
+        from pypeline_spark.sinks.keyed import MemoryCatalog
+
+        spark.createDataFrame(
+            [(i, f"n{i}") for i in range(1, 6)], "id bigint, name string"
+        ).createOrReplaceTempView("__rmw_src__")
+        spark.createDataFrame(
+            [(2, 1, "upsert", "two"), (3, 2, "delete", None), (6, 3, "upsert", "six")],
+            "id bigint, seq bigint, op string, name string",
+        ).createOrReplaceTempView("__rmw_log__")
+        config = PipelineConfig.from_dict(
+            {
+                "pypes": {
+                    "seed": {
+                        "extract_query": "SELECT * FROM __rmw_src__ WHERE id <= 3",
+                        "target_table": "rmw",
+                        "type": "upsert",
+                        "key_columns": ["id"],
+                    },
+                    "more": {
+                        "extract_query": "SELECT * FROM __rmw_src__ WHERE id >= 4",
+                        "target_table": "rmw",
+                        "type": "append",
+                    },
+                    "log": {
+                        "extract_query": "SELECT id, seq, op, name FROM __rmw_log__",
+                        "target_table": "rmw",
+                        "type": "cdc",
+                        "key_columns": ["id"],
+                    },
+                },
+                "pypelines": {"append": ["seed", "more"], "cdc": ["log"]},
+            }
+        )
+        jdbc_cat = JdbcMergeCatalog(
+            spark, f"jdbc:derby:{tmp_path}/rmwdb;create=true", driver=DRIVER
+        )
+        mem_cat = MemoryCatalog()
+        for cat in (jdbc_cat, mem_cat):
+            Pypeline(spark, config, catalog=cat).run("append")
+        assert sorted(r.id for r in jdbc_cat.get("rmw").collect()) == [1, 2, 3, 4, 5]
+        assert _rows(jdbc_cat.get("rmw")) == _rows(mem_cat.get("rmw"))
+        for cat in (jdbc_cat, mem_cat):
+            Pypeline(spark, config, catalog=cat).run("cdc")
+        got = {r.id: r.name for r in jdbc_cat.get("rmw").collect()}
+        assert got == {1: "n1", 2: "two", 4: "n4", 5: "n5", 6: "six"}
+        assert _rows(jdbc_cat.get("rmw")) == _rows(mem_cat.get("rmw"))
+        # the replace went through a stage table, which is gone again
+        assert not [t for t in _tables(jdbc_cat) if "__STAGE" in t]
 
 
 class TestJdbcMergeProperties:

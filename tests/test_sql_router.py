@@ -313,6 +313,52 @@ class TestPostQueryRouting:
         # the registered view reflects the post-DML state
         assert spark.table("ledger").filter("k % 2 = 0").count() == 0
 
+    def test_keyed_step_post_query_writes_through_router(
+        self, spark, sf_dir, tmp_path
+    ):
+        """The post hook routes by the table it names, not by the
+        step's type: a DELETE on a lakehouse table from an upsert step
+        into a MemoryCatalog lands as a new table version."""
+        from pypeline_spark.pipeline.lakehouse import LakehouseCatalog
+        from pypeline_spark.pipeline.runner import Pypeline
+        from pypeline_spark.pipeline.spec import PipelineConfig
+        from pypeline_spark.sinks.keyed import MemoryCatalog
+
+        register_tables(spark, sf_dir)
+        config = PipelineConfig.from_dict({
+            "pypes": {
+                "seed": {
+                    "extract_query": (
+                        "SELECT c_custkey AS k, c_acctbal AS amt "
+                        "FROM customer WHERE c_custkey BETWEEN 1 AND 40"
+                    ),
+                    "target_table": "audit",
+                    "type": "lakehouse",
+                    "lakehouse_op": "overwrite",
+                    "batch_id": "seed-1",
+                },
+                "dim": {
+                    "extract_query": (
+                        "SELECT c_custkey AS k, c_name FROM customer "
+                        "WHERE c_custkey BETWEEN 1 AND 10"
+                    ),
+                    "target_table": "names",
+                    "type": "upsert",
+                    "key_columns": ["k"],
+                    "post_query": "DELETE FROM audit WHERE k > 20",
+                },
+            },
+            "pypelines": {"p": ["seed", "dim"]},
+        })
+        lake = LakehouseCatalog(str(tmp_path))
+        mem = MemoryCatalog()
+        Pypeline(spark, config, catalog=mem, lakehouse=lake).run("p")
+        t = lake.table("audit")
+        assert t.version() == 2  # seed + the routed DELETE
+        assert t.read(spark).count() == 20
+        assert spark.table("audit").count() == 20  # view refreshed
+        assert mem.get("names").count() == 10
+
     def test_non_claimed_post_query_falls_back(self, spark, sf_dir, tmp_path):
         from pypeline_spark.pipeline.lakehouse import LakehouseCatalog
         from pypeline_spark.pipeline.runner import Pypeline
