@@ -145,10 +145,10 @@ def run_lakehouse_step(
       delete-by-key contract; source keys set-deduped like the
       reference's ``set()`` at Pype.py:184).
 
-    Mode selection: ``dv`` whenever the table carries outstanding
-    merge-on-read deltas (the copy-on-write forms refuse that state;
-    deletion vectors are exactly the O(changed rows) path a 100 TB
-    streaming table needs), else ``cow``.  The step's hydrated
+    Mode selection is :meth:`ManifestTable.dml_mode`: ``dv`` whenever
+    the table carries outstanding merge-on-read deltas (the
+    copy-on-write forms refuse that state) or tracks row ids, else
+    ``cow``.  The step's hydrated
     ``batch_id`` rides into the exactly-once ledger on every form.
 
     Keyed merges (upsert, keyed update, keyed delete) prune by key
@@ -161,16 +161,7 @@ def run_lakehouse_step(
     t = catalog.table(spec.target_table)
     batch_id = _hydrate_batch_id(spec.batch_id, ph)
     op = spec.lakehouse_op
-    # dv whenever outstanding merge-on-read deltas make copy-on-write
-    # illegal, AND on row-tracked tables (ADVICE r18): CoW forms now
-    # preserve ids too (r18 directive #4), but the deletion-vector
-    # path is the O(changed rows) one a tracked streaming table wants.
-    meta = t._read_manifest() if t.version() > 0 else {}
-    mode = (
-        "dv"
-        if meta.get("deltas") or meta.get("row_tracking")
-        else "cow"
-    )
+    mode = t.dml_mode()
 
     if op == "upsert":
         keys = list(spec.key_columns)

@@ -936,6 +936,17 @@ class ManifestTable:
     def version(self) -> int:
         return self._read_manifest()["version"]
 
+    def dml_mode(self) -> str:
+        """The ``mode`` a row-level write (MERGE / UPDATE / DELETE)
+        should take on this table right now: ``'dv'`` whenever
+        outstanding merge-on-read deltas make copy-on-write illegal,
+        and on row-tracked tables (deletion vectors are the
+        O(changed rows) shape a tracked streaming table wants);
+        ``'cow'`` otherwise.  The lakehouse step and the SQL router
+        both ask this."""
+        m = self._read_manifest()
+        return "dv" if m.get("deltas") or m.get("row_tracking") else "cow"
+
     def _max_version_on_disk(self) -> int:
         """Highest ``_manifest.vN.json`` present — one directory
         listing, independent of the pointer cache AND of the
@@ -5536,6 +5547,294 @@ class ManifestTable:
                 ]
         return cands
 
+    # -- the row-level writers' shared tail -----------------------------------
+    #
+    # delete_where / update_where / merge_into, each copy-on-write or
+    # deletion-vector, differ only in how they pick the target slice and
+    # which rows they emit.  The rest is one path: assignments compile
+    # (and reject) before any fileset is written, every fileset goes
+    # through _write_rows, and _commit_rows holds the one commit record
+    # and the one set of conflict rules.
+
+    def _compile_assignments(
+        self, m: dict, df: DataFrame, assignments: dict, what: str
+    ):
+        """The UPDATE assignment compiler of every row-level writer.
+        Rejects, against ``df``'s columns, ``__row_id__`` (the
+        row-tracking identity), unknown columns, identity columns
+        (GENERATED ALWAYS) and direct assignment of generated columns,
+        then returns ``post(rows)``: ``rows`` with every assignment
+        evaluated against the OLD row (simultaneous assignment, the
+        SQL rule) and cast to the column's tracked type, and every
+        generated column that depends on an assigned one recomputed
+        from the POST values (the Delta generated-column update rule).
+        Writers call it before they write anything, so a rejected
+        statement leaves no file behind."""
+        from pyspark.sql import functions as F
+
+        if "__row_id__" in assignments:
+            raise ValueError(
+                f"{what}: __row_id__ is the row-tracking identity — "
+                "it cannot be assigned"
+            )
+        typ = {f.name: f.dataType for f in df.schema.fields}
+        bad = [c for c in assignments if c not in typ]
+        if bad:
+            raise ValueError(f"{what}: no such column(s) {bad}")
+        self._require_no_identity_values(m, assignments, what)
+        gens = self._generated_recompute(m, assignments)
+        ass = {
+            c: (F.expr(e) if isinstance(e, str) else F.lit(e)).cast(typ[c])
+            for c, e in assignments.items()
+        }
+
+        def post(rows: DataFrame) -> DataFrame:
+            out = rows.select(
+                *[ass.get(c, F.col(c)).alias(c) for c in rows.columns]
+            )
+            for g, ge in gens:
+                out = out.withColumn(g, F.expr(ge).cast(typ[g]))
+            return out
+
+        return post
+
+    def _dml_images(self, m: dict, pre: DataFrame, post_of, what: str):
+        """``(post, cdc)`` of a predicate UPDATE (``post_of`` from
+        :meth:`_compile_assignments`) or DELETE (``post_of=None``, no
+        post images) over the matched rows ``pre``: the typed CDC is
+        pre- and post-image pairs or full-row deletes, and the post
+        images face the CHECK/NOT NULL gate."""
+        from pyspark.sql import functions as F
+
+        if post_of is None:
+            return None, pre.withColumn(self._CT, F.lit("delete"))
+        post = post_of(pre)
+        self._validate_constraints(m, post, what)
+        return post, pre.withColumn(
+            self._CT, F.lit("update_preimage")
+        ).unionByName(post.withColumn(self._CT, F.lit("update_postimage")))
+
+    @staticmethod
+    def _dml_metrics(post, cdc_meta: dict) -> dict:
+        """A predicate DML's operation metrics from its CDC footers
+        (free: an UPDATE's CDC is pre+post image pairs, a DELETE's one
+        row per deleted row)."""
+        n = sum(v.get("rows") or 0 for v in cdc_meta.values())
+        return {"rows_updated": n // 2} if post is not None else {
+            "rows_deleted": n
+        }
+
+    def _key_range(
+        self, m: dict, src: DataFrame, keys: Sequence[str],
+        prune_col: Optional[str],
+    ) -> Optional[tuple]:
+        """``(prune_col, lo, hi)``: the source key range a keyed MERGE
+        prunes target files by, from one min/max job over ``src`` —
+        or None when ``prune_col`` is unset, when no file records
+        stats usable for it (:meth:`_has_prune_stats`: the job would
+        buy nothing), or when the source holds no non-null key.
+        ``prune_col`` must be a key column: pruning on any other
+        column could split a key's rows across kept and pruned
+        files."""
+        from pyspark.sql import functions as F
+
+        if prune_col is None:
+            return None
+        if prune_col not in keys:
+            raise ValueError(
+                f"prune_col {prune_col!r} must be a key column "
+                f"{keys} — pruning on a non-key column could "
+                "split a key's rows across kept and pruned files"
+            )
+        if not self._has_prune_stats(m, prune_col):
+            return None
+        bounds = self._collect_index_metadata(
+            src.agg(F.min(prune_col).alias("lo"), F.max(prune_col).alias("hi"))
+        )
+        lo = bounds.column("lo").to_pylist()[0]
+        hi = bounds.column("hi").to_pylist()[0]
+        return None if lo is None else (prune_col, lo, hi)
+
+    def _write_rows(
+        self,
+        m: dict,
+        df: DataFrame,
+        stats_cols: Sequence[str] = (),
+        bloom_cols: Sequence[str] = (),
+        keep_one: bool = False,
+    ) -> tuple[list[str], dict, dict]:
+        """Write ``df`` as a new fileset under ``m``'s tracked schema and
+        column mapping (:meth:`_for_write` + :meth:`_write_fileset`)
+        and return ``(files, stats, filemeta)`` without its zero-row
+        part-files: Spark always writes partition 0, so a sparse split
+        stages empty files the manifest must not list (they stay
+        unreferenced ``gc_orphans`` debris).  ``keep_one``: when every
+        part-file is empty, keep the first — the fileset is the only
+        one its list will hold (a CDC fileset, or the rewrite of a
+        table a copy-on-write DELETE emptied, whose schema an
+        untracked table still reads from that file)."""
+        wdf, wstats, wbloom = self._for_write(
+            self._carry_mapping(m), m.get("schema"), df, stats_cols,
+            bloom_cols,
+        )
+        files, stats, meta = self._write_fileset(wdf, wstats, wbloom)
+        kept = [f for f in files if meta[f].get("rows") != 0]
+        if keep_one and not kept:
+            kept = files[:1]
+        return (
+            kept,
+            {f: stats[f] for f in kept if f in stats},
+            {f: meta[f] for f in kept},
+        )
+
+    def _write_dv(self, spark: SparkSession, tagged: DataFrame) -> tuple:
+        """Write the (file, position) pairs of the provenance-tagged
+        rows ``tagged`` as a new deletion-vector fileset; returns
+        ``(files, filemeta, counts)`` with the per-file suppression
+        counts read back from the WRITTEN fileset — exactly what the
+        manifest will reference."""
+        from pyspark.sql import functions as F
+
+        files, _stats, meta = self._write_fileset(
+            tagged.select(
+                F.col("__dvf__").alias("__file__"),
+                F.col("__dvp__").alias("__pos__"),
+            )
+        )
+        counts = self._written_value_counts(
+            spark, files, "__file__", read_schema=self._dv_read_schema()
+        )
+        return files, meta, counts
+
+    def _commit_rows(
+        self,
+        m: dict,
+        what: str,
+        batch_id: Optional[str],
+        *,
+        written: tuple,
+        cdc: tuple,
+        op_metrics: dict,
+        novel: Optional[DataFrame],
+        keys: Optional[Sequence[str]] = None,
+        carried: Optional[Sequence[str]] = None,
+        dv: Optional[tuple] = None,
+    ) -> int:
+        """The one commit of every row-level writer, built against
+        snapshot ``m`` and published through :meth:`_commit_retrying`
+        (rebasing over pure-metadata commits only).  ``written`` and
+        ``cdc`` are :meth:`_write_rows` results — the new base files
+        and the typed change set; ``novel`` holds the updated/inserted
+        rows the NDV sketch absorbs (None: no new values); ``keys``
+        are recorded when the table has no key columns yet.
+
+        The two commit shapes differ only in data:
+
+        - copy-on-write (``carried`` = the base files kept verbatim):
+          the new fileset replaces every other base file, deltas clear
+          (these writers refuse a delta'd table), and only carried
+          files keep their dv — the rewrite applied the rest
+          physically;
+        - deletion vector (``carried=None``): the new fileset appends
+          to the base, whose files keep their stats, blooms and
+          filemeta verbatim as sound upper bounds; outstanding deltas
+          carry through untouched (their acted images are
+          dv-suppressed, their other keys still resolve by rank); and
+          ``dv`` — :meth:`_write_dv`'s ``(files, filemeta, counts)`` —
+          adds its suppression counts.
+
+        Conflicts: a ledgered ``batch_id`` is a concurrent duplicate
+        (no commit); a changed file list, delta list or dv aborts
+        (only content commits move them, and those never rebase); so
+        does a changed schema, column mapping or constraint set — the
+        filesets were written under m's schema and physical names
+        (readers would misinterpret them under others), and the post
+        images were gated against m's constraints only, so a rebase
+        over a concurrent ADD CONSTRAINT would publish rows the new
+        invariant never saw."""
+        files, stats, filemeta = written
+        cdc_files, _cdc_stats, cdc_meta = cdc
+        dv_files, dv_meta, counts = dv or ([], {}, {})
+
+        def build(mm: dict) -> Optional[dict]:
+            if batch_id is not None and batch_id in mm["batch_ids"]:
+                return None
+            if (
+                mm["files"] != m["files"]
+                or (mm.get("deltas") or []) != (m.get("deltas") or [])
+                or (mm.get("dv") or None) != (m.get("dv") or None)
+            ):
+                raise CommitConflict(
+                    f"{what}: table content changed under the commit"
+                )
+            if (
+                mm.get("schema") != m.get("schema")
+                or self._carry_mapping(mm) != self._carry_mapping(m)
+                or self._constraints(mm) != self._constraints(m)
+            ):
+                raise CommitConflict(
+                    f"{what} lost to a concurrent schema/mapping/"
+                    "constraint change — re-read the table and retry"
+                )
+            old_stats = mm.get("stats", {})
+            old_meta = mm.get("filemeta", {})
+            if carried is not None:
+                base, deltas = list(carried), []
+                old_stats = {f: old_stats[f] for f in carried if f in old_stats}
+                old_meta = {f: old_meta[f] for f in carried if f in old_meta}
+                dv_state = self._carry_dv(mm, carried)
+            else:
+                base, deltas = mm["files"], mm.get("deltas", [])
+                dv_state = self._carry_dv(mm)
+                if counts:
+                    old_dv = mm.get("dv") or {"files": [], "rows": {}}
+                    rows = dict(old_dv["rows"])
+                    for f, n in counts.items():
+                        rows[f] = rows.get(f, 0) + n
+                    dv_state = {
+                        "dv": {
+                            "files": old_dv["files"] + dv_files,
+                            "rows": rows,
+                            "total": old_dv.get(
+                                "total", sum(old_dv["rows"].values())
+                            ) + sum(counts.values()),
+                        }
+                    }
+            new = {
+                "version": mm["version"] + 1,
+                "files": base + files,
+                "deltas": deltas,
+                "key_columns": mm.get("key_columns") or keys,
+                "batch_ids": mm["batch_ids"]
+                + ([batch_id] if batch_id is not None else []),
+                "stats": {**old_stats, **stats},
+                "filemeta": {
+                    **old_meta, **filemeta, **dv_meta, **cdc_meta,
+                },
+                "bloom_cols": m.get("bloom_cols", []),
+                # row-level changes ARE derivable across this commit:
+                # the CDC fileset is the exact change set
+                "dml": True,
+                "cdc_files": cdc_files,
+                "op_metrics": op_metrics,
+                # ANALYZE profile + NDV sketch ride (provenance-kept;
+                # deletes only ever leave the HLL an upper bound)
+                **self._carry_meta(mm),
+                **self._carry_mapping(mm),
+                **dv_state,
+            }
+            if mm.get("schema") is not None:
+                new["schema"] = mm["schema"]
+            if mm.get("ndv_cols") and novel is not None:
+                # updated + inserted values are new marks; one
+                # O(changed rows) pass
+                new["ndv"] = self._update_ndv(
+                    novel, mm["ndv_cols"], mm.get("ndv", {})
+                )
+            return new
+
+        return self._commit_retrying(m, build, frozenset({"metadata"}), what)
+
     def delete_where(
         self,
         spark: SparkSession,
@@ -5552,9 +5851,12 @@ class ManifestTable:
         requires a compacted table (no outstanding merge-on-read
         deltas); ``mode='dv'`` works over them by delegating to the
         keyed dv MERGE (r18 — see below).  A predicate matching
-        nothing is a no-op (no commit).  OCC: rebases over pure-metadata commits
-        only while schema/mapping/constraints are unchanged; any
-        content commit aborts it.
+        nothing is a no-op (no commit).  Every row-level writer —
+        this one, :meth:`update_where` and :meth:`merge_into`, in
+        either mode — ends in the same commit (:meth:`_commit_rows`):
+        OCC rebases over pure-metadata commits only while
+        schema/mapping/constraints are unchanged, and any content
+        commit aborts it.
 
         ``mode='cow'`` (default): copy-on-write — only files actually
         holding matching rows are rewritten (two-phase: metadata
@@ -5617,7 +5919,10 @@ class ManifestTable:
         (``_change_type='update_preimage'/'update_postimage'`` — the
         Delta CDF vocabulary), so feed consumers see both the group a
         row left and the one it joined.  Updated rows face the
-        CHECK/NOT NULL gate like any batch.
+        CHECK/NOT NULL gate like any batch.  Assignments are checked
+        (unknown, ``__row_id__``, identity and generated columns are
+        rejected) before any file is written, and the commit follows
+        :meth:`delete_where`'s rules.
 
         ``mode='cow'`` (default): the same two-phase pruned
         copy-on-write as :meth:`delete_where` — touched files rewrite
@@ -5655,14 +5960,6 @@ class ManifestTable:
         m = self._read_manifest()
         if batch_id is not None and batch_id in m["batch_ids"]:
             return m["version"]
-        rowtrack = bool(m.get("row_tracking"))
-        if rowtrack and assignments is not None and "__row_id__" in assignments:
-            raise ValueError(
-                f"{what}: __row_id__ is the row-tracking identity — "
-                "it cannot be assigned"
-            )
-        if assignments is not None:
-            self._require_no_identity_values(m, assignments, what)
         if m.get("deltas"):
             raise ValueError(
                 f"{what} rewrites base files (copy-on-write): compact() "
@@ -5691,11 +5988,15 @@ class ManifestTable:
         # computed at the scan — safe above the dv anti-join, where
         # input_file_name() would be undefined); the predicate filter
         # still reaches the parquet read as a pushed filter
+        scan = self._read_base_tagged(spark, m, candidates)
+        post_of = (
+            None if assignments is None
+            else self._compile_assignments(
+                m, scan.drop("__dvf__", "__dvp__"), assignments, what
+            )
+        )
         hits = self._collect_index_metadata(
-            self._read_base_tagged(spark, m, candidates)
-            .filter(pred)
-            .select("__dvf__")
-            .distinct()
+            scan.filter(pred).select("__dvf__").distinct()
         )
         touched = sorted(hits.column("__dvf__").to_pylist())
         if not touched:
@@ -5710,128 +6011,24 @@ class ManifestTable:
         # copy-on-write rewrite, exactly like compact/OPTIMIZE.
         tdf = (
             self._rowid_content(spark, m, touched)
-            if rowtrack
+            if m.get("row_tracking")
             else self._read_base(spark, m, touched)
         )
-        matched = tdf.filter(pred)
+        post, cdc = self._dml_images(m, tdf.filter(pred), post_of, what)
         kept = tdf.filter(not_pred)  # FALSE and NULL rows stay (SQL rule)
-        if assignments is not None:
-            typ = {f.name: f.dataType for f in tdf.schema.fields}
-            bad = [c for c in assignments if c not in typ]
-            if bad:
-                raise ValueError(f"update_where: no such column(s) {bad}")
-            ass = {
-                c: (F.expr(e) if isinstance(e, str) else F.lit(e)).cast(
-                    typ[c]
-                )
-                for c, e in assignments.items()
-            }
-            post = matched.select(
-                *[ass.get(c, F.col(c)).alias(c) for c in tdf.columns]
-            )
-            # generated columns whose sources this UPDATE touches
-            # recompute from the POST values (simultaneous assignment
-            # first, derivation second — the Delta generated-column
-            # update rule)
-            for g, ge in self._generated_recompute(m, assignments):
-                post = post.withColumn(g, F.expr(ge).cast(typ[g]))
-            self._validate_constraints(m, post, what)
-            new_content = kept.unionByName(post)
-            cdc = matched.withColumn(
-                self._CT, F.lit("update_preimage")
-            ).unionByName(
-                post.withColumn(self._CT, F.lit("update_postimage"))
-            )
-        else:
-            new_content = kept
-            cdc = matched.withColumn(self._CT, F.lit("delete"))
-        bloom = m.get("bloom_cols", [])
-        carry_map = self._carry_mapping(m)
-        wdf, wstats, wbloom = self._for_write(
-            carry_map, m.get("schema"), new_content, stats_cols, bloom
+        written = self._write_rows(
+            m,
+            kept if post is None else kept.unionByName(post),
+            stats_cols,
+            m.get("bloom_cols", []),
+            keep_one=not carried,
         )
-        files, stats, filemeta = self._write_fileset(wdf, wstats, wbloom)
-        cdf, _cs, _cb = self._for_write(carry_map, m.get("schema"), cdc, (), ())
-        cdc_files, _cstats, cdc_meta = self._write_fileset(cdf)
-        # operation metrics from the CDC footers (free: update CDC is
-        # pre+post image pairs, delete CDC is one row per deleted row)
-        cdc_rows = sum(v.get("rows") or 0 for v in cdc_meta.values())
-        op_metrics = (
-            {"rows_updated": cdc_rows // 2}
-            if assignments is not None
-            else {"rows_deleted": cdc_rows}
+        cdc_w = self._write_rows(m, cdc, keep_one=True)
+        return self._commit_rows(
+            m, what, batch_id, written=written, cdc=cdc_w,
+            op_metrics=self._dml_metrics(post, cdc_w[2]), novel=post,
+            carried=carried,
         )
-
-        def build(mm: dict) -> Optional[dict]:
-            if batch_id is not None and batch_id in mm["batch_ids"]:
-                return None
-            if mm["files"] != m["files"] or mm.get("deltas"):
-                # only pure-metadata commits are in rebase_over, so
-                # this cannot trip — belt-and-braces for the file split
-                raise CommitConflict(
-                    f"{what}: file list changed under the rewrite"
-                )
-            if (
-                mm.get("schema") != m.get("schema")
-                or self._carry_mapping(mm) != self._carry_mapping(m)
-                or self._constraints(mm) != self._constraints(m)
-            ):
-                # the rewritten fileset was produced under m's schema,
-                # physical-name assignment and constraint set — a
-                # concurrent change to any of them would publish files
-                # readers misinterpret (or rows never re-validated:
-                # post-images were gated against m's constraints only,
-                # so a rebase over a concurrent ADD CONSTRAINT would
-                # publish rows the new invariant never saw)
-                raise CommitConflict(
-                    f"{what} lost to a concurrent schema/mapping/"
-                    "constraint change — re-read the table and retry"
-                )
-            old_meta = mm.get("filemeta", {})
-            new = {
-                "version": mm["version"] + 1,
-                "files": carried + files,
-                "deltas": [],
-                "key_columns": mm.get("key_columns"),
-                "batch_ids": mm["batch_ids"]
-                + ([batch_id] if batch_id is not None else []),
-                "stats": {
-                    **{
-                        f: mm["stats"][f]
-                        for f in carried
-                        if f in mm.get("stats", {})
-                    },
-                    **stats,
-                },
-                "filemeta": {
-                    **{f: old_meta[f] for f in carried if f in old_meta},
-                    **filemeta,
-                    **cdc_meta,
-                },
-                "bloom_cols": bloom,
-                # row-level changes ARE derivable across this commit:
-                # the CDC fileset is the exact change set
-                "dml": True,
-                "cdc_files": cdc_files,
-                "op_metrics": op_metrics,
-                # ANALYZE profile + NDV sketch ride (provenance-kept;
-                # deletes only ever leave the HLL an upper bound);
-                # rewritten files had their dv physically applied —
-                # only carried files keep theirs
-                **self._carry_meta(mm),
-                **self._carry_mapping(mm),
-                **self._carry_dv(mm, carried),
-            }
-            if mm.get("schema") is not None:
-                new["schema"] = mm["schema"]
-            if mm.get("ndv_cols") and assignments is not None:
-                # updated values are new marks; one O(changed rows) pass
-                new["ndv"] = self._update_ndv(
-                    post, mm["ndv_cols"], mm.get("ndv", {})
-                )
-            return new
-
-        return self._commit_retrying(m, build, frozenset({"metadata"}), what)
 
     def _dml_where_dv_over_deltas(
         self,
@@ -5884,41 +6081,24 @@ class ManifestTable:
         if resolved is None:
             return m["version"]
         matched = resolved.filter(F.expr(predicate).cast("boolean"))
-        idc = set(m.get("identity_cols") or {})
         if assignments is None:
             src = matched.select(*keys)
             clauses = [("delete", None, None)]
         else:
-            typ = {f.name: f.dataType for f in resolved.schema.fields}
-            bad = [c for c in assignments if c not in typ]
-            if bad:
-                raise ValueError(f"{what}: no such column(s) {bad}")
-            self._require_no_identity_values(m, assignments, what)
-            # rejects direct assignment of a generated column (the
-            # recompute itself happens inside the merge plan)
-            self._generated_recompute(m, dict(assignments))
-            ass = {
-                c: (F.expr(e) if isinstance(e, str) else F.lit(e)).cast(
-                    typ[c]
-                )
-                for c, e in assignments.items()
-            }
-            src = matched.select(
-                *[
-                    ass.get(c, F.col(c)).alias(c)
-                    for c in resolved.columns
-                    if c not in idc  # table-assigned, never a payload
-                ]
-            )
+            post = self._compile_assignments(
+                m, resolved, assignments, what
+            )(matched)
+            # identity columns are table-assigned, never a payload; the
+            # merge plan recomputes generated ones itself
+            src = post.drop(*(m.get("identity_cols") or {}))
             clauses = [("update", None, "*")]
-        return self.merge_into(
+        return self._merge_into_dv(
             spark,
             src,
-            key_columns=list(keys),
+            list(keys),
             clauses=clauses,
             batch_id=batch_id,
             stats_cols=stats_cols,
-            mode="dv",
         )
 
     def _dml_where_dv(
@@ -5937,9 +6117,7 @@ class ManifestTable:
         their pre-images as typed CDC, and — for UPDATE — ONLY the
         post-image rows land as new base files appended to the file
         list.  Write cost is O(matched rows) for both verbs; untouched
-        rows of touched files are never copied.  Per-file suppression
-        counts are read back from the WRITTEN dv fileset (exactly what
-        the manifest references), one metadata-sized job."""
+        rows of touched files are never copied."""
         from pyspark.sql import functions as F
 
         what = (
@@ -5957,7 +6135,6 @@ class ManifestTable:
         if not m["files"]:
             return m["version"]
         self._guard_dv_reserved(m, (), what)
-        pred = F.expr(predicate).cast("boolean")
         candidates = self._dml_candidates(m, predicate)
         if not candidates:
             return m["version"]  # provably nothing matches
@@ -5966,139 +6143,29 @@ class ManifestTable:
         # a dv UPDATE preserves identity by construction)
         matched = self._read_base_tagged(
             spark, m, candidates, rowid=bool(m.get("row_tracking"))
-        ).filter(pred)
-        dv_files, _ds, dv_meta = self._write_fileset(
-            matched.select(
-                F.col("__dvf__").alias("__file__"),
-                F.col("__dvp__").alias("__pos__"),
-            )
+        ).filter(F.expr(predicate).cast("boolean"))
+        pre = matched.drop("__dvf__", "__dvp__")
+        post_of = (
+            None if assignments is None
+            else self._compile_assignments(m, pre, assignments, what)
         )
-        counts = self._written_value_counts(
-            spark, dv_files, "__file__", read_schema=self._dv_read_schema()
-        )
-        if not counts:
+        post, cdc = self._dml_images(m, pre, post_of, what)
+        dv = self._write_dv(spark, matched)
+        if not dv[2]:
             # predicate matched no rows: no commit (the empty written
             # fileset is gc_orphans debris)
             return m["version"]
-        pre = matched.drop("__dvf__", "__dvp__")
-        bloom = m.get("bloom_cols", [])
-        carry_map = self._carry_mapping(m)
-        post_files: list[str] = []
-        post_stats: dict = {}
-        post_meta: dict = {}
-        post = None
-        if assignments is not None:
-            typ = {f.name: f.dataType for f in pre.schema.fields}
-            bad = [c for c in assignments if c not in typ]
-            if bad:
-                raise ValueError(f"{what}: no such column(s) {bad}")
-            if "__row_id__" in assignments:
-                raise ValueError(
-                    f"{what}: __row_id__ is the row-tracking identity "
-                    "— it cannot be assigned"
-                )
-            self._require_no_identity_values(m, assignments, what)
-            ass = {
-                c: (F.expr(e) if isinstance(e, str) else F.lit(e)).cast(
-                    typ[c]
-                )
-                for c, e in assignments.items()
-            }
-            post = pre.select(
-                *[ass.get(c, F.col(c)).alias(c) for c in pre.columns]
+        written = (
+            ([], {}, {}) if post is None else self._write_rows(
+                m, post, stats_cols, m.get("bloom_cols", [])
             )
-            for g, ge in self._generated_recompute(m, assignments):
-                post = post.withColumn(g, F.expr(ge).cast(typ[g]))
-            self._validate_constraints(m, post, what)
-            wdf, wstats, wbloom = self._for_write(
-                carry_map, m.get("schema"), post, stats_cols, bloom
-            )
-            post_files, post_stats, post_meta = self._write_fileset(
-                wdf, wstats, wbloom
-            )
-            cdc = pre.withColumn(
-                self._CT, F.lit("update_preimage")
-            ).unionByName(
-                post.withColumn(self._CT, F.lit("update_postimage"))
-            )
-        else:
-            cdc = pre.withColumn(self._CT, F.lit("delete"))
-        cdf, _cs, _cb = self._for_write(
-            carry_map, m.get("schema"), cdc, (), ()
         )
-        cdc_files, _cstats, cdc_meta = self._write_fileset(cdf)
-        added = sum(counts.values())
-        op_metrics = (
-            {"rows_updated": added}
-            if assignments is not None
-            else {"rows_deleted": added}
+        cdc_w = self._write_rows(m, cdc, keep_one=True)
+        return self._commit_rows(
+            m, what, batch_id, written=written, cdc=cdc_w,
+            op_metrics=self._dml_metrics(post, cdc_w[2]), novel=post,
+            dv=dv,
         )
-
-        def build(mm: dict) -> Optional[dict]:
-            if batch_id is not None and batch_id in mm["batch_ids"]:
-                return None
-            if mm["files"] != m["files"] or mm.get("deltas"):
-                raise CommitConflict(
-                    f"{what}: file list changed under the commit"
-                )
-            if (
-                mm.get("schema") != m.get("schema")
-                or self._carry_mapping(mm) != self._carry_mapping(m)
-                or self._constraints(mm) != self._constraints(m)
-            ):
-                # the predicate was evaluated (and the CDC/post
-                # filesets written) under m's schema/mapping;
-                # constraints keep the same abort rule as every DML
-                raise CommitConflict(
-                    f"{what} lost to a concurrent schema/mapping/"
-                    "constraint change — re-read the table and retry"
-                )
-            old_dv = mm.get("dv") or {"files": [], "rows": {}, "total": 0}
-            rows = dict(old_dv["rows"])
-            for f, n in counts.items():
-                rows[f] = rows.get(f, 0) + n
-            new = {
-                "version": mm["version"] + 1,
-                # UPDATE appends the post-image fileset; DELETE leaves
-                # the list bit-identical
-                "files": mm["files"] + post_files,
-                "deltas": [],
-                "key_columns": mm.get("key_columns"),
-                "batch_ids": mm["batch_ids"]
-                + ([batch_id] if batch_id is not None else []),
-                # untouched base files keep their stats/blooms/filemeta
-                # verbatim as sound upper bounds
-                "stats": {**mm.get("stats", {}), **post_stats},
-                "filemeta": {
-                    **mm.get("filemeta", {}),
-                    **post_meta,
-                    **dv_meta,
-                    **cdc_meta,
-                },
-                "bloom_cols": bloom,
-                "dml": True,
-                "cdc_files": cdc_files,
-                "op_metrics": op_metrics,
-                "dv": {
-                    "files": old_dv["files"] + dv_files,
-                    "rows": rows,
-                    "total": old_dv.get(
-                        "total", sum(old_dv["rows"].values())
-                    ) + added,
-                },
-                **self._carry_meta(mm),
-                **self._carry_mapping(mm),
-            }
-            if mm.get("schema") is not None:
-                new["schema"] = mm["schema"]
-            if mm.get("ndv_cols") and post is not None:
-                # updated values are new marks; one O(changed rows) pass
-                new["ndv"] = self._update_ndv(
-                    post, mm["ndv_cols"], mm.get("ndv", {})
-                )
-            return new
-
-        return self._commit_retrying(m, build, frozenset({"metadata"}), what)
 
     _MERGE_KINDS = (
         "update", "delete", "insert", "update_by_source", "delete_by_source",
@@ -6154,6 +6221,26 @@ class ManifestTable:
                 f"source carries reserved column(s) {sorted(bad_names)}"
             )
         return parsed, matched_idx, insert_idx, by_source_idx
+
+    def _merge_prepare(self, m, source, key_columns, clauses, what):
+        """The source checks both MERGE modes run before any read: the
+        merge keys resolve (argument, else the recorded key columns),
+        the source carries no ``__row_id__`` or identity column (the
+        table assigns both) and the clause list parses.  Returns
+        ``(keys, parsed, matched_idx, insert_idx, by_source_idx)``."""
+        keys = list(key_columns or m.get("key_columns") or [])
+        if not keys:
+            raise ValueError(
+                "merge_into needs key_columns (argument or recorded "
+                "on the table)"
+            )
+        if m.get("row_tracking") and "__row_id__" in source.columns:
+            raise ValueError(
+                f"{what}: __row_id__ is the row-tracking identity — "
+                "the table assigns it; drop the column from the source"
+            )
+        self._require_no_identity_values(m, source.columns, what)
+        return (keys, *self._merge_parse_clauses(clauses, source))
 
     @staticmethod
     def _merge_check_payloads(parsed, typ, tcols, src_cols, generated=()):
@@ -6238,10 +6325,12 @@ class ManifestTable:
                 "rule: which row's assignments win is undefined)"
             )
 
-    def _merge_plan(
-        self, parsed, t_base, src, keys, defaults=None, identity=()
-    ):
-        """The one-join MERGE plan shared by the cow and dv modes: one
+    def _merge_plan(self, m, parsed, t_base, src, keys, guard):
+        """The one-join MERGE plan shared by the cow and dv modes over
+        the target slice ``t_base`` each mode picked.  Payloads are
+        checked against the slice's columns first, and ``guard`` (some
+        matched or by-source clause can see a target row) runs the
+        ambiguity guard.  One
         full-outer join of target × source drives every clause through
         a single CASE-typed ``__act__`` column; one CASE per column
         routes each action to its clause's assignment (updates default
@@ -6249,7 +6338,7 @@ class ManifestTable:
         expression when one is declared; generated columns must be
         explicitly assigned in a merge, their join-context derivation
         is ambiguous), cast to the tracked type.
-        Returns ``(proj, tcols, typ, upd_codes, del_codes, ins_codes)``
+        Returns ``(proj, tcols, upd_codes, del_codes, ins_codes)``
         where ``proj`` is the action-tagged content projection.  It
         also carries the old target row as the struct ``__t__`` and
         the acted key (target key, else source key) as the struct
@@ -6259,16 +6348,24 @@ class ManifestTable:
 
         tcols = list(t_base.columns)
         typ = {f.name: f.dataType for f in t_base.schema.fields}
+        defaults = m.get("column_defaults") or {}
+        identity = set(m.get("identity_cols") or {})
+        self._merge_check_payloads(
+            parsed, typ, tcols, src.columns,
+            generated=set(m.get("generated_columns") or ()) | identity,
+        )
+        if guard:
+            self._merge_ambiguity_guard(src, t_base, keys)
         gens = {
             c: d["expr"]
-            for c, d in (defaults or {}).items()
+            for c, d in defaults.items()
             if d.get("generated") and c in typ
         }
         # identity columns behave like generated ones in the plan:
         # never copied from the source ('*' skips them), updates keep
         # the target's value, inserts write null (the id — and with it
         # the identity value — is minted at publish)
-        gset = set(gens) | set(identity)
+        gset = set(gens) | identity
         t = t_base.withColumn("__t__", F.lit(True)).alias("t")
         s = src.withColumn("__s__", F.lit(True)).alias("s")
         j = t.join(
@@ -6314,7 +6411,7 @@ class ManifestTable:
                 if c in assigns:
                     val = _rhs(assigns[c])
                 elif kind == "insert":
-                    d = (defaults or {}).get(c)
+                    d = defaults.get(c)
                     val = (
                         F.expr(d["expr"])
                         if d is not None and not d.get("generated")
@@ -6365,9 +6462,9 @@ class ManifestTable:
         # rejected in _merge_check_payloads)
         if gens:
             act_codes = upd_codes + ins_codes
-            cd = defaults or {}
             for g in sorted(
-                gens, key=lambda c: ((cd.get(c) or {}).get("added_v", 0), c)
+                gens,
+                key=lambda c: ((defaults.get(c) or {}).get("added_v", 0), c),
             ):
                 proj = proj.withColumn(
                     g,
@@ -6376,7 +6473,7 @@ class ManifestTable:
                         F.expr(gens[g]).cast(typ[g]),
                     ).otherwise(F.col(g)),
                 )
-        return proj, tcols, typ, upd_codes, del_codes, ins_codes
+        return proj, tcols, upd_codes, del_codes, ins_codes
 
     def _merge_cdc(self, proj, tcols, upd_codes, del_codes, ins_codes):
         """The commit's exact row-level change set as typed CDC
@@ -6484,9 +6581,10 @@ class ManifestTable:
         ``delete``, ``insert`` — the Delta CDF vocabulary), so
         :meth:`changes`, the streaming source and the IVM maintainers
         read straight THROUGH it.  Schema is stable across a merge
-        (evolution goes through ``evolve_schema``); OCC rebases over
-        pure-metadata commits only while schema/mapping/constraints
-        are unchanged.
+        (evolution goes through ``evolve_schema``); the commit is the
+        one every row-level writer shares (:meth:`_commit_rows`): OCC
+        rebases over pure-metadata commits only while
+        schema/mapping/constraints are unchanged.
 
         The reference's users run this statement against their target
         database (post_query, reference pypeline/Pype.py:167); here it
@@ -6510,13 +6608,6 @@ class ManifestTable:
         m = self._read_manifest()
         if batch_id is not None and batch_id in m["batch_ids"]:
             return m["version"]
-        rowtrack = bool(m.get("row_tracking"))
-        if rowtrack and "__row_id__" in source.columns:
-            raise ValueError(
-                f"{what}: __row_id__ is the row-tracking identity — "
-                "the table assigns it; drop the column from the source"
-            )
-        self._require_no_identity_values(m, source.columns, what)
         if m.get("deltas"):
             raise ValueError(
                 "merge_into rewrites base files (copy-on-write): "
@@ -6524,15 +6615,10 @@ class ManifestTable:
                 "use mode='dv' (the deletion-vector MERGE works over "
                 "outstanding deltas)"
             )
-        keys = list(key_columns or m.get("key_columns") or [])
-        if not keys:
-            raise ValueError(
-                "merge_into needs key_columns (argument or recorded "
-                "on the table)"
-            )
-        parsed, matched_idx, insert_idx, by_source_idx = (
-            self._merge_parse_clauses(clauses, source)
+        keys, parsed, matched_idx, insert_idx, by_source_idx = (
+            self._merge_prepare(m, source, key_columns, clauses, what)
         )
+        rowtrack = bool(m.get("row_tracking"))
         # one lazy checkpoint: the source feeds up to three jobs (the
         # touched-file scan, the ambiguity guard, the merge itself) —
         # materialize its lineage once instead of recomputing a
@@ -6542,29 +6628,16 @@ class ManifestTable:
         if by_source_idx:
             # any unmatched target row may change: every file is touched
             touched = list(m["files"])
-        elif m["files"]:
-            cands = list(m["files"])
-            if prune_col is not None and prune_col not in keys:
-                raise ValueError(
-                    f"prune_col {prune_col!r} must be a key column "
-                    f"{keys} — pruning on a non-key column could "
-                    "split a key's rows across kept and pruned files"
-                )
-            if prune_col is not None and self._has_prune_stats(m, prune_col):
-                bounds = self._collect_index_metadata(
-                    src.agg(
-                        F.min(prune_col).alias("lo"),
-                        F.max(prune_col).alias("hi"),
-                    )
-                )
-                lo = bounds.column("lo").to_pylist()[0]
-                hi = bounds.column("hi").to_pylist()[0]
-                if lo is not None:
-                    cands = [
-                        f
-                        for f in cands
-                        if self._overlaps(m, f, prune_col, lo, hi)
-                    ]
+        else:
+            prune = (
+                self._key_range(m, src, keys, prune_col)
+                if m["files"] else None
+            )
+            cands = [
+                f for f in m["files"]
+                if prune is None or self._overlaps(m, f, *prune)
+            ]
+            touched = []
             if cands:
                 # provenance tagged AT THE SCAN (input_file_name above
                 # a join is undefined), then one semi-join finds the
@@ -6580,10 +6653,6 @@ class ManifestTable:
                 )
                 tset = set(hits.column("__dvf__").to_pylist())
                 touched = [f for f in m["files"] if f in tset]
-            else:
-                touched = []
-        else:
-            touched = []
         if not touched and not insert_idx:
             return m["version"]  # nothing matched, nothing to insert
         carried = [f for f in m["files"] if f not in set(touched)]
@@ -6616,24 +6685,10 @@ class ManifestTable:
                 )
         else:
             t_base = src.limit(0)  # empty untracked table: bootstrap
-        self._merge_check_payloads(
-            parsed,
-            {f.name: f.dataType for f in t_base.schema.fields},
-            list(t_base.columns),
-            src.columns,
-            generated=set(m.get("generated_columns") or ())
-            | set(m.get("identity_cols") or {}),
-        )
-        # -- ambiguity guard (the SQL/Delta multiple-match rule) ---------
-        if (matched_idx or by_source_idx) and touched:
-            self._merge_ambiguity_guard(src, t_base, keys)
         # -- phase 2: one full-outer join, one action column -------------
-        proj, tcols, _typ, upd_codes, del_codes, ins_codes = (
-            self._merge_plan(
-                parsed, t_base, src, keys,
-                defaults=m.get("column_defaults"),
-                identity=set(m.get("identity_cols") or {}),
-            )
+        proj, tcols, upd_codes, del_codes, ins_codes = self._merge_plan(
+            m, parsed, t_base, src, keys,
+            guard=bool((matched_idx or by_source_idx) and touched),
         )
         content = proj.drop("__t__", "__s__")
         keep_codes = ["keep"] + upd_codes + ins_codes
@@ -6646,80 +6701,23 @@ class ManifestTable:
         self._validate_constraints(m, novel, what)
         # -- typed CDC (the commit's exact change set) --------------------
         cdc = self._merge_cdc(proj, tcols, upd_codes, del_codes, ins_codes)
-        # -- write + commit (the _dml_where protocol) ---------------------
-        bloom = m.get("bloom_cols", [])
-        carry_map = self._carry_mapping(m)
-        wdf, wstats, wbloom = self._for_write(
-            carry_map, m.get("schema"), new_content, stats_cols, bloom
+        # -- write + commit (the row-level writers' shared tail) ----------
+        written = self._write_rows(
+            m, new_content, stats_cols, m.get("bloom_cols", []),
+            keep_one=not carried,
         )
-        files, stats, filemeta = self._write_fileset(wdf, wstats, wbloom)
-        if not touched and sum(
-            v.get("rows") or 0 for v in filemeta.values()
-        ) == 0:
+        if not touched and not any(
+            v.get("rows") for v in written[2].values()
+        ):
             # insert-only merge that inserted nothing: no commit (the
             # empty orphaned fileset is gc_orphans debris)
             return m["version"]
-        cdf, _cs, _cb = self._for_write(carry_map, m.get("schema"), cdc, (), ())
-        cdc_files, _cstats, cdc_meta = self._write_fileset(cdf)
-        op_metrics = self._cdc_op_metrics(spark, cdc_files)
-
-        def build(mm: dict) -> Optional[dict]:
-            if batch_id is not None and batch_id in mm["batch_ids"]:
-                return None
-            if mm["files"] != m["files"] or mm.get("deltas"):
-                raise CommitConflict(
-                    f"{what}: file list changed under the rewrite"
-                )
-            if (
-                mm.get("schema") != m.get("schema")
-                or self._carry_mapping(mm) != self._carry_mapping(m)
-                or self._constraints(mm) != self._constraints(m)
-            ):
-                raise CommitConflict(
-                    f"{what} lost to a concurrent schema/mapping/"
-                    "constraint change — re-read the table and retry"
-                )
-            old_meta = mm.get("filemeta", {})
-            new = {
-                "version": mm["version"] + 1,
-                "files": carried + files,
-                "deltas": [],
-                "key_columns": mm.get("key_columns") or keys,
-                "batch_ids": mm["batch_ids"]
-                + ([batch_id] if batch_id is not None else []),
-                "stats": {
-                    **{
-                        f: mm["stats"][f]
-                        for f in carried
-                        if f in mm.get("stats", {})
-                    },
-                    **stats,
-                },
-                "filemeta": {
-                    **{f: old_meta[f] for f in carried if f in old_meta},
-                    **filemeta,
-                    **cdc_meta,
-                },
-                "bloom_cols": bloom,
-                # row-level changes ARE derivable across this commit:
-                # the CDC fileset is the exact change set
-                "dml": True,
-                "cdc_files": cdc_files,
-                "op_metrics": op_metrics,
-                **self._carry_meta(mm),
-                **self._carry_mapping(mm),
-                **self._carry_dv(mm, carried),
-            }
-            if mm.get("schema") is not None:
-                new["schema"] = mm["schema"]
-            if mm.get("ndv_cols"):
-                # updated + inserted values are new marks
-                new["ndv"] = self._update_ndv(
-                    novel, mm["ndv_cols"], mm.get("ndv", {})
-                )
-            return new
-
-        return self._commit_retrying(m, build, frozenset({"metadata"}), what)
+        cdc_w = self._write_rows(m, cdc, keep_one=True)
+        return self._commit_rows(
+            m, what, batch_id, written=written, cdc=cdc_w,
+            op_metrics=self._cdc_op_metrics(spark, cdc_w[0]), novel=novel,
+            keys=keys, carried=carried,
+        )
 
     #: column names the deletion-vector machinery reserves: the row
     #: provenance tags (`__dvf__`/`__dvp__`) and the dv fileset schema
@@ -6776,12 +6774,9 @@ class ManifestTable:
         m = self._read_manifest()
         if batch_id is not None and batch_id in m["batch_ids"]:
             return m["version"]
-        keys = list(key_columns or m.get("key_columns") or [])
-        if not keys:
-            raise ValueError(
-                "merge_into needs key_columns (argument or recorded "
-                "on the table)"
-            )
+        keys, parsed, matched_idx, insert_idx, by_source_idx = (
+            self._merge_prepare(m, source, key_columns, clauses, what)
+        )
         if m.get("deltas") and m.get("key_columns") and keys != m["key_columns"]:
             raise ValueError(
                 f"{what}: merge keys {keys} must equal the recorded "
@@ -6790,40 +6785,15 @@ class ManifestTable:
                 "on them)"
             )
         self._guard_dv_reserved(m, source.columns, what)
-        if m.get("row_tracking") and "__row_id__" in source.columns:
-            raise ValueError(
-                f"{what}: __row_id__ is the row-tracking identity — "
-                "drop it from the source (ids are never assigned by a "
-                "merge)"
-            )
-        self._require_no_identity_values(m, source.columns, what)
-        parsed, matched_idx, insert_idx, by_source_idx = (
-            self._merge_parse_clauses(clauses, source)
-        )
         # one lazy checkpoint: the source feeds the resolved join, the
         # ambiguity guard and (via bounds) the suppression-scan prune
         src = source.localCheckpoint(eager=False)
         has_content = bool(m["files"] or m.get("deltas"))
         # -- the resolved target, file-pruned when provably sound ------
-        prune = None
-        if prune_col is not None and has_content and not by_source_idx:
-            if prune_col not in keys:
-                raise ValueError(
-                    f"prune_col {prune_col!r} must be a key column "
-                    f"{keys} — pruning on a non-key column could "
-                    "split a key's rows across kept and pruned files"
-                )
-            if self._has_prune_stats(m, prune_col):
-                bounds = self._collect_index_metadata(
-                    src.agg(
-                        F.min(prune_col).alias("lo"),
-                        F.max(prune_col).alias("hi"),
-                    )
-                )
-                lo = bounds.column("lo").to_pylist()[0]
-                hi = bounds.column("hi").to_pylist()[0]
-                if lo is not None:
-                    prune = (prune_col, lo, hi)
+        prune = (
+            self._key_range(m, src, keys, prune_col)
+            if has_content and not by_source_idx else None
+        )
         if m.get("row_tracking") and has_content:
             # thread the stable row id through the merge: updates keep
             # the matched target row's id (it rides tcols into the
@@ -6846,22 +6816,9 @@ class ManifestTable:
                 )
             else:
                 t_base = src.limit(0)  # empty untracked table: bootstrap
-        self._merge_check_payloads(
-            parsed,
-            {f.name: f.dataType for f in t_base.schema.fields},
-            list(t_base.columns),
-            src.columns,
-            generated=set(m.get("generated_columns") or ())
-            | set(m.get("identity_cols") or {}),
-        )
-        if (matched_idx or by_source_idx) and has_content:
-            self._merge_ambiguity_guard(src, t_base, keys)
-        proj, tcols, _typ, upd_codes, del_codes, ins_codes = (
-            self._merge_plan(
-                parsed, t_base, src, keys,
-                defaults=m.get("column_defaults"),
-                identity=set(m.get("identity_cols") or {}),
-            )
+        proj, tcols, upd_codes, del_codes, ins_codes = self._merge_plan(
+            m, parsed, t_base, src, keys,
+            guard=bool((matched_idx or by_source_idx) and has_content),
         )
         # dv mode writes acted rows only, never keep/drop ones: run the
         # join once into that batch-sized slice, which the suppression
@@ -6881,9 +6838,7 @@ class ManifestTable:
         sup_codes = list(upd_codes + del_codes)
         if m.get("deltas"):
             sup_codes += ins_codes
-        counts: dict = {}
-        dv_files: list[str] = []
-        dv_meta: dict = {}
+        dv = ([], {}, {})
         if sup_codes and has_content:
             skeys = (
                 acted.filter(F.col("__act__").isin(sup_codes))
@@ -6918,121 +6873,26 @@ class ManifestTable:
                 tagged = parts[0]
                 for p in parts[1:]:
                     tagged = tagged.unionByName(p)
-                dv_files, _ds, dv_meta = self._write_fileset(
-                    tagged.join(skeys, on=keys, how="left_semi").select(
-                        F.col("__dvf__").alias("__file__"),
-                        F.col("__dvp__").alias("__pos__"),
-                    )
-                )
-                counts = self._written_value_counts(
-                    spark,
-                    dv_files,
-                    "__file__",
-                    read_schema=self._dv_read_schema(),
+                dv = self._write_dv(
+                    spark, tagged.join(skeys, on=keys, how="left_semi")
                 )
         # -- the post-image / insert fileset ----------------------------
-        bloom = m.get("bloom_cols", [])
-        carry_map = self._carry_mapping(m)
-        post_files: list[str] = []
-        post_stats: dict = {}
-        post_meta: dict = {}
-        if upd_codes or ins_codes:
-            wdf, wstats, wbloom = self._for_write(
-                carry_map, m.get("schema"), novel, stats_cols, bloom
+        written = (
+            self._write_rows(
+                m, novel, stats_cols, m.get("bloom_cols", [])
             )
-            post_files, post_stats, post_meta = self._write_fileset(
-                wdf, wstats, wbloom
-            )
-            # a sparse action split can stage empty part-files: keep
-            # the manifest free of zero-row entries
-            empty = {
-                f for f, v in post_meta.items() if not (v.get("rows") or 0)
-            }
-            if empty:
-                post_files = [f for f in post_files if f not in empty]
-                post_stats = {
-                    f: v for f, v in post_stats.items() if f not in empty
-                }
-                post_meta = {
-                    f: v for f, v in post_meta.items() if f not in empty
-                }
-        novel_rows = sum(v.get("rows") or 0 for v in post_meta.values())
-        if not counts and novel_rows == 0:
+            if upd_codes or ins_codes else ([], {}, {})
+        )
+        if not dv[2] and not written[0]:
             # nothing matched a clause, nothing inserted: no commit
             # (the empty orphaned filesets are gc_orphans debris)
             return m["version"]
-        cdf, _cs, _cb = self._for_write(carry_map, m.get("schema"), cdc, (), ())
-        cdc_files, _cstats, cdc_meta = self._write_fileset(cdf)
-        added = sum(counts.values())
-        op_metrics = self._cdc_op_metrics(spark, cdc_files)
-
-        def build(mm: dict) -> Optional[dict]:
-            if batch_id is not None and batch_id in mm["batch_ids"]:
-                return None
-            if (
-                mm["files"] != m["files"]
-                or mm.get("deltas") != m.get("deltas")
-                or (mm.get("dv") or None) != (m.get("dv") or None)
-            ):
-                raise CommitConflict(
-                    f"{what}: table content changed under the merge"
-                )
-            if (
-                mm.get("schema") != m.get("schema")
-                or self._carry_mapping(mm) != self._carry_mapping(m)
-                or self._constraints(mm) != self._constraints(m)
-            ):
-                raise CommitConflict(
-                    f"{what} lost to a concurrent schema/mapping/"
-                    "constraint change — re-read the table and retry"
-                )
-            old_dv = mm.get("dv") or {"files": [], "rows": {}, "total": 0}
-            rows = dict(old_dv["rows"])
-            for f, n in counts.items():
-                rows[f] = rows.get(f, 0) + n
-            new = {
-                "version": mm["version"] + 1,
-                "files": mm["files"] + post_files,
-                # outstanding deltas carry through UNTOUCHED: their
-                # acted images are dv-suppressed, their other keys
-                # still resolve by rank exactly as before
-                "deltas": mm.get("deltas", []),
-                "key_columns": mm.get("key_columns") or keys,
-                "batch_ids": mm["batch_ids"]
-                + ([batch_id] if batch_id is not None else []),
-                "stats": {**mm.get("stats", {}), **post_stats},
-                "filemeta": {
-                    **mm.get("filemeta", {}),
-                    **post_meta,
-                    **dv_meta,
-                    **cdc_meta,
-                },
-                "bloom_cols": bloom,
-                "dml": True,
-                "cdc_files": cdc_files,
-                "op_metrics": op_metrics,
-                **self._carry_meta(mm),
-                **self._carry_mapping(mm),
-            }
-            if counts:
-                new["dv"] = {
-                    "files": old_dv["files"] + dv_files,
-                    "rows": rows,
-                    "total": old_dv.get(
-                        "total", sum(old_dv["rows"].values())
-                    ) + added,
-                }
-            elif old_dv["rows"]:
-                new["dv"] = old_dv
-            if mm.get("schema") is not None:
-                new["schema"] = mm["schema"]
-            if mm.get("ndv_cols"):
-                new["ndv"] = self._update_ndv(
-                    novel, mm["ndv_cols"], mm.get("ndv", {})
-                )
-            return new
-
-        return self._commit_retrying(m, build, frozenset({"metadata"}), what)
+        cdc_w = self._write_rows(m, cdc, keep_one=True)
+        return self._commit_rows(
+            m, what, batch_id, written=written, cdc=cdc_w,
+            op_metrics=self._cdc_op_metrics(spark, cdc_w[0]), novel=novel,
+            keys=keys, dv=dv,
+        )
 
     # -- merge-on-read --------------------------------------------------------
     #

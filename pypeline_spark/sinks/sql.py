@@ -37,9 +37,10 @@ trailing semicolon):
   ``.. TO TIMESTAMP AS OF '<ts>'``
 
 Execution semantics are the dispatched methods' own: DML/MERGE
-auto-select deletion-vector mode whenever outstanding merge-on-read
-deltas or row tracking make it the right physical plan (the lakehouse
-step's rule), predicates/expressions are Spark SQL expression strings
+take :meth:`ManifestTable.dml_mode` (deletion vectors whenever
+outstanding merge-on-read deltas or row tracking make them the right
+physical plan — the lakehouse step asks the same method),
+predicates/expressions are Spark SQL expression strings
 evaluated by the engine (never re-implemented here), and every write
 lands as one OCC-published manifest version.
 
@@ -606,29 +607,18 @@ def parse_statement(sql: str) -> tuple[str, dict]:
     return "restore", {"table": table, "timestamp": tm.group(1)}
 
 
-def _auto_mode(t: ManifestTable) -> str:
-    """The lakehouse step's physical-plan rule: deletion vectors
-    whenever outstanding deltas make CoW illegal or row tracking makes
-    O(changed rows) the right shape; plain copy-on-write otherwise."""
-    if t.version() == 0:
-        return "cow"
-    m = t._read_manifest()
-    return "dv" if m.get("deltas") or m.get("row_tracking") else "cow"
-
-
 def execute_table_sql(
     spark: SparkSession,
     resolver: Callable[[str], ManifestTable],
     sql: str,
     batch_id: Optional[str] = None,
-    mode: Optional[str] = None,
 ):
     """Parse + dispatch one statement.  ``resolver`` maps a table name
     to its :class:`ManifestTable` (a :class:`LakehouseCatalog.table`
     bound method fits).  Returns the :meth:`history` DataFrame for
     DESCRIBE HISTORY, the removed-file count for VACUUM, and the new
     (or ledger-replayed) version number for every write statement.
-    ``mode`` overrides the dv/cow auto-selection for DML/MERGE."""
+    DML/MERGE take the table's :meth:`ManifestTable.dml_mode`."""
     kind, p = parse_statement(sql)
     t = resolver(p["table"])
     if kind == "history":
@@ -707,14 +697,14 @@ def execute_table_sql(
             p["where"],
             p["assignments"],
             batch_id=batch_id,
-            mode=mode or _auto_mode(t),
+            mode=t.dml_mode(),
         )
     if kind == "delete":
         return t.delete_where(
             spark,
             p["where"],
             batch_id=batch_id,
-            mode=mode or _auto_mode(t),
+            mode=t.dml_mode(),
         )
     # merge
     src = (
@@ -728,7 +718,7 @@ def execute_table_sql(
         key_columns=p["keys"],
         clauses=p["clauses"],
         batch_id=batch_id,
-        mode=mode or _auto_mode(t),
+        mode=t.dml_mode(),
     )
 
 

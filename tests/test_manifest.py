@@ -6690,29 +6690,61 @@ class TestVacuumDryRunAndDetail:
         assert d["protocol"] == ManifestTable.PROTOCOL_VERSION
 
 
+_ROW_WRITERS = [
+    (verb, mode)
+    for verb in ("merge", "update", "delete")
+    for mode in ("cow", "dv")
+]
+
+
 class TestOccDvMergeInterleaving:
     """OCC posture of the r16 dv MERGE: it REBASES over racing
     pure-metadata commits (schema/mapping/constraints unchanged), and
     blind delta appends rebase over IT (kind 'dml'), with commit-order
-    content in both cases."""
+    content in both cases.  The rebase and abort rules are the one
+    commit builder every row-level writer shares, so the first two
+    tests run each writer form: MERGE, UPDATE and DELETE, each
+    copy-on-write and deletion-vector."""
 
-    def test_dv_merge_rebases_over_racing_metadata(self, spark, tmp_path):
-        t = ManifestTable(str(tmp_path / "dvmm"))
+    @staticmethod
+    def _seed(spark, t, verb):
+        # every writer form ends with key 3 at 999 among keys 0-9: the
+        # merge/update forms write it, the delete forms remove key 10
+        rows = (
+            [(k, 999 if k == 3 else k * 10) for k in range(11)]
+            if verb == "delete"
+            else [(k, k * 10) for k in range(10)]
+        )
         t.commit_overwrite(
-            spark.createDataFrame(
-                [(k, k * 10) for k in range(10)], "k long, a long"
-            ),
+            spark.createDataFrame(rows, "k long, a long"),
             batch_id="seed", stats_cols=["k"],
         )
+
+    @staticmethod
+    def _write(spark, t, verb, mode):
+        if verb == "merge":
+            return t.merge_into(
+                spark,
+                spark.createDataFrame([(3, 999)], "k long, a long"),
+                key_columns=["k"],
+                clauses=[("update", None, {"a": "s.a"})],
+                batch_id="m", mode=mode,
+            )
+        if verb == "update":
+            return t.update_where(
+                spark, "k = 3", {"a": "999"}, batch_id="m", mode=mode
+            )
+        return t.delete_where(spark, "k = 10", batch_id="m", mode=mode)
+
+    @pytest.mark.parametrize("verb, mode", _ROW_WRITERS)
+    def test_dv_merge_rebases_over_racing_metadata(
+        self, spark, tmp_path, verb, mode
+    ):
+        t = ManifestTable(str(tmp_path / "dvmm"))
+        self._seed(spark, t, verb)
         b = ManifestTable(t.root)
         t._race_once = lambda: b.set_ledger_retention(50, batch_id="meta")
-        v = t.merge_into(
-            spark,
-            spark.createDataFrame([(3, 999)], "k long, a long"),
-            key_columns=["k"],
-            clauses=[("update", None, {"a": "s.a"})],
-            batch_id="m", mode="dv",
-        )
+        v = self._write(spark, t, verb, mode)
         assert v == 3  # seed + racing metadata + the rebased merge
         m = t._read_manifest()
         assert {"seed", "meta", "m"} <= set(m["batch_ids"])
@@ -6720,26 +6752,18 @@ class TestOccDvMergeInterleaving:
         got = {r["k"]: r["a"] for r in t.read_resolved(spark).collect()}
         assert got[3] == 999 and len(got) == 10
 
-    def test_dv_merge_aborts_on_racing_schema_change(self, spark, tmp_path):
+    @pytest.mark.parametrize("verb, mode", _ROW_WRITERS)
+    def test_dv_merge_aborts_on_racing_schema_change(
+        self, spark, tmp_path, verb, mode
+    ):
         from pypeline_spark.sinks.manifest import CommitConflict
 
         t = ManifestTable(str(tmp_path / "dvms"))
-        t.commit_overwrite(
-            spark.createDataFrame(
-                [(k, k * 10) for k in range(10)], "k long, a long"
-            ),
-            batch_id="seed", stats_cols=["k"],
-        )
+        self._seed(spark, t, verb)
         b = ManifestTable(t.root)
         t._race_once = lambda: b.evolve_schema("tag string", batch_id="e")
         with pytest.raises(CommitConflict, match="schema|rebased"):
-            t.merge_into(
-                spark,
-                spark.createDataFrame([(3, 999)], "k long, a long"),
-                key_columns=["k"],
-                clauses=[("update", None, {"a": "s.a"})],
-                batch_id="m", mode="dv",
-            )
+            self._write(spark, t, verb, mode)
         # the schema change won; the merge never half-applied
         m = ManifestTable(t.root)._read_manifest()
         assert "e" in m["batch_ids"] and "m" not in m["batch_ids"]
@@ -6780,6 +6804,88 @@ class TestOccDvMergeInterleaving:
         assert 2 not in got and got[20] == 200
         assert got[5] == 555 and got[30] == 300
         assert len(got) == 10 - 1 + 1 + 1
+
+
+class TestRowWriterTail:
+    """The validate -> write -> commit path delete_where, update_where
+    and merge_into share in both modes: a rejected assignment writes
+    nothing, and no commit lists a zero-row part-file unless the
+    fileset would otherwise be empty."""
+
+    @pytest.mark.parametrize("mode", ["cow", "dv"])
+    @pytest.mark.parametrize(
+        "assignments, match",
+        [
+            ({"nope": "1"}, "no such column"),
+            ({"__row_id__": "0"}, "__row_id__"),
+            ({"sk": "7"}, "GENERATED ALWAYS"),
+        ],
+        ids=["unknown", "row_id", "identity"],
+    )
+    def test_rejected_update_writes_no_files(
+        self, spark, tmp_path, mode, assignments, match
+    ):
+        t = ManifestTable(str(tmp_path / "rej"))
+        t.commit_overwrite(
+            spark.range(0, 40, numPartitions=4).select(
+                F.col("id").alias("k"), (F.col("id") * 10).alias("a")
+            ),
+            batch_id="seed", stats_cols=["k"],
+        )
+        t.enable_row_tracking(batch_id="rt")
+        t.add_identity_column(name="sk", start=1, step=1, batch_id="idc")
+        v = t.version()
+        before = set(os.listdir(t.data_dir))
+        with pytest.raises(ValueError, match=match):
+            t.update_where(spark, "k < 5", assignments, batch_id="u",
+                           mode=mode)
+        assert t.version() == v
+        assert set(os.listdir(t.data_dir)) == before
+
+    @staticmethod
+    def _rows(spark, lo, hi):
+        return spark.range(lo, hi, numPartitions=1).select(
+            F.col("id").alias("k"), (F.col("id") * 10).alias("a")
+        )
+
+    def _two_files(self, spark, tmp_path):
+        t = ManifestTable(str(tmp_path / "two"))
+        t.commit_overwrite(self._rows(spark, 0, 10), batch_id="seed",
+                           stats_cols=["k"])
+        t.commit_append(self._rows(spark, 10, 20), batch_id="app",
+                        stats_cols=["k"])
+        return t
+
+    @pytest.mark.parametrize("op", ["update", "delete", "merge"])
+    def test_cow_writers_list_no_zero_row_files(self, spark, tmp_path, op):
+        # every row of the first file is acted on, so the rewrite's
+        # partition 0 holds no row — and Spark writes partition 0 anyway
+        t = self._two_files(spark, tmp_path)
+        if op == "update":
+            t.update_where(spark, "k < 10", {"a": "a + 1"}, batch_id="w")
+        elif op == "delete":
+            t.delete_where(spark, "k < 10", batch_id="w")
+        else:
+            t.merge_into(
+                spark, self._rows(spark, 0, 10), key_columns=["k"],
+                clauses=[("delete", None, None)], batch_id="w",
+            )
+        m = t._read_manifest()
+        listed = m["files"] + m["cdc_files"]
+        assert all(m["filemeta"][f]["rows"] > 0 for f in listed)
+        got = sorted(r.k for r in t.read(spark).collect())
+        assert got == list(range(0 if op == "update" else 10, 20))
+
+    def test_cow_delete_emptying_the_table_keeps_one_file(
+        self, spark, tmp_path
+    ):
+        t = self._two_files(spark, tmp_path)
+        t.delete_where(spark, "k >= 0", batch_id="w")
+        m = t._read_manifest()
+        assert len(m["files"]) == 1
+        assert m["filemeta"][m["files"][0]]["rows"] == 0
+        got = t.read(spark)
+        assert got.columns == ["k", "a"] and got.count() == 0
 
 
 class TestVectorizedPrune:
