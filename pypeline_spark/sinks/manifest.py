@@ -1632,20 +1632,24 @@ class ManifestTable:
         REBASED (rebuilt against the tip, retried) only when every
         intervening commit's kind is in ``rebase_over``:
 
-        - blind delta appends serialize after other deltas,
-          metadata-only commits, AND content-preserving reorgs
-          (``{'delta', 'metadata', 'reorg'}``) — the WriteSerializable
-          append story; scheduled compaction/OPTIMIZE no longer aborts
-          a concurrent ingest (the appended fileset resolves by rank
+        - blind appends (``commit_append``, ``commit_delta``: the
+          additive policy of :meth:`_commit_rows`) serialize after
+          other appends, deltas, predicate DML, metadata-only commits
+          AND content-preserving reorgs — the WriteSerializable append
+          story; scheduled compaction/OPTIMIZE never aborts a
+          concurrent ingest (the appended fileset resolves by rank
           over the reorganized base exactly as it would have over the
           old one — the reorg preserved the resolved row set, and
           typed-CDC attribution stays exact for the same reason);
         - ANALYZE serializes after metadata-only commits and reorgs
           (both preserve the content the profile describes; a content
           commit underneath would silently stale it);
-        - every CONTENT rewrite (overwrite / CoW merge / restore)
-          conflicts with everything and aborts to the caller, who must
-          re-read and re-decide.
+        - every content writer that read a snapshot (overwrite,
+          ``commit_merge``, the row-level MERGE/UPDATE/DELETE: the
+          strict policy) rebases over pure-metadata commits only; a
+          content commit underneath aborts it to the caller, who must
+          re-read and re-decide (a restore publishes directly and
+          aborts on any race).
 
         An aborted attempt may leave never-referenced files in
         ``data/`` — harmless (no manifest names them; snapshot reads
@@ -4836,7 +4840,14 @@ class ManifestTable:
         version (e.g. the durable IVM maintainer's feed cursor: rollup
         content and cursor land in one atomic publish, so a crash can
         never separate them).  Scoped to overwrite-maintained tables:
-        other commit kinds do not carry it forward."""
+        other commit kinds do not carry it forward.
+
+        Concurrency: the commit rebases over pure-metadata commits
+        (ledger retention, ANALYZE) and aborts with
+        :class:`CommitConflict` on any content commit or any schema,
+        column-mapping, constraint or DEFAULT change underneath it —
+        the replacement was validated and laid out against the
+        snapshot it read."""
         m = self._read_manifest()
         if batch_id is not None and batch_id in m["batch_ids"]:
             return m["version"]  # replay detected: no-op
@@ -4849,16 +4860,13 @@ class ManifestTable:
         ndv_track = (
             m.get("ndv_cols", []) if ndv_cols is None else list(ndv_cols)
         )
-        # NO colstats/ndv carry: replaced content invalidates the
-        # ANALYZE profile and the absorbed sketch marks outright.
         # Schema tracking RESETS to the batch (replaced content, not
         # an evolution) — but column-MAPPING state is a table property
         # and survives: same-named columns keep their id + physical
         # name, new ones mint fresh ids (the Delta overwriteSchema
         # rule), so old files stay time-travel-readable under their
         # own manifests and the mapping never forks.
-        schema = self._merge_schema(None, df)
-        carry_map = self._carry_mapping(m)
+        schema, max_id = self._merge_schema(None, df), None
         if m.get("identity_cols"):
             # identity survives an overwrite (table property, Delta
             # rule): the columns re-attach to the reset schema and the
@@ -4886,35 +4894,43 @@ class ManifestTable:
                     for f in schema["fields"]
                 ],
             }
-            schema, carry_map["max_column_id"] = self._assign_column_ids(
-                m, schema
-            )
+            schema, max_id = self._assign_column_ids(m, schema)
         wdf, wstats, wbloom = self._for_write(
-            carry_map, schema, df, stats_cols, bloom
+            self._carry_mapping(m), schema, df, stats_cols, bloom
         )
-        files, stats, filemeta = self._write_fileset(wdf, wstats, wbloom)
-        new = {
-            "version": m["version"] + 1,
-            "files": files,
-            "batch_ids": m["batch_ids"] + ([batch_id] if batch_id is not None else []),
-            "stats": stats,
-            "filemeta": filemeta,
-            "bloom_cols": bloom,
-            "schema": schema,
-            "op_metrics": {
-                "num_output_rows": sum(
-                    v.get("rows") or 0 for v in filemeta.values()
-                )
-            },
-            **carry_map,
-        }
-        if properties is not None:
-            new["properties"] = dict(properties)
+        # NO colstats/ndv carry: replaced content invalidates the
+        # ANALYZE profile and the absorbed sketch marks outright (the
+        # sketch restarts from the new content), and the key columns
+        # of the deltas it clears
+        reset = {"key_columns": None, "bloom_cols": bloom}
         if ndv_track:
-            new["ndv_cols"] = ndv_track
-            new["ndv"] = self._update_ndv(df, ndv_track, {})
-        self._publish(new)
-        return new["version"]
+            reset["ndv_cols"] = ndv_track
+        if properties is not None:
+            reset["properties"] = dict(properties)
+        return self._commit_rows(
+            m, "commit_overwrite", batch_id,
+            written=self._write_fileset(wdf, wstats, wbloom), novel=df,
+            carried=[], schema=(schema, max_id), reset=reset,
+        )
+
+    def _require_base_columns(self, m: dict, df: DataFrame, what: str) -> None:
+        """New base files beside an UNTRACKED table's: nothing could
+        null-fill a column mismatch at read, so the batch must match
+        the base's columns exactly — one parquet footer peek
+        (metadata, no data read)."""
+        import pyarrow.parquet as pq
+
+        base_cols = set(
+            pq.ParquetFile(self._path(m["files"][0])).schema_arrow.names
+        )
+        if set(df.columns) != base_cols:
+            raise ValueError(
+                f"{what}: batch columns "
+                f"{sorted(set(df.columns) ^ base_cols)} differ from the "
+                "untracked table's — record a schema first "
+                "(commit_overwrite/compact) so existing files null-fill "
+                "at read"
+            )
 
     def commit_append(
         self,
@@ -4931,14 +4947,16 @@ class ManifestTable:
         whatever the table size.
 
         Blind-append concurrency (the WriteSerializable story): OCC
-        rebases over concurrent deltas, other appends, metadata-only
-        commits, content-preserving reorgs and predicate DML — two
-        racing appenders both land, in some order; a concurrent
-        constraint add aborts the rebase (the batch was never proven
-        against the new invariant).  The commit classifies as kind
-        ``'append'`` (structurally: the parent's file list survives as
-        a prefix), so :meth:`changes` and the streaming source read
-        straight THROUGH it — the appended files ARE the change set,
+        rebases over other appends, metadata-only commits,
+        content-preserving reorgs and predicate DML — two racing
+        appenders both land, in some order; a concurrent delta aborts
+        it (appended base rows would rank below the delta's), and so
+        does a concurrent constraint, column DEFAULT or
+        generated-column change (the batch was never proven against
+        the new invariant, nor filled against the new column).  The
+        commit classifies as kind ``'append'`` (structurally: the
+        parent's file list survives as a prefix), so :meth:`changes`
+        and the streaming source read straight THROUGH it — the appended files ARE the change set,
         emitted as untyped ``'upsert'`` events like any blind append.
 
         Schema: additive evolution exactly like :meth:`commit_delta`
@@ -4980,120 +4998,23 @@ class ManifestTable:
                 "from the batch"
             )
         if m.get("schema") is None and m["files"]:
-            # untracked non-empty base: nothing can null-fill a column
-            # mismatch at read — require an exact match (metadata-only
-            # footer peek), same rule as commit_merge's carried path
-            import pyarrow.parquet as pq
-
-            base_cols = set(
-                pq.ParquetFile(self._path(m["files"][0])).schema_arrow.names
-            )
-            if set(df.columns) != base_cols:
-                raise ValueError(
-                    "commit_append: batch columns "
-                    f"{sorted(set(df.columns) ^ base_cols)} differ from "
-                    "the untracked table's — record a schema first "
-                    "(commit_overwrite/compact) so existing files "
-                    "null-fill at read"
-                )
-        bloom = m.get("bloom_cols", [])
-        # fileset written ONCE before the OCC loop (the commit_delta
-        # discipline): on a mapped table the physical names are fixed
-        # by the assignment as of m — rebase only while it holds
-        write_schema = None
-        write_max = m.get("max_column_id")
-        if m.get("schema") is not None:
-            write_schema = self._merge_schema(m["schema"], df)
-            if self._mapping_enabled(m):
-                write_schema, write_max = self._assign_column_ids(
-                    m, write_schema
-                )
+            self._require_base_columns(m, df, "commit_append")
+        # the fileset is written ONCE, before the OCC loop; on a mapped
+        # table its physical names are fixed by the assignment as of m
+        schema = self._write_schema(m, df)
+        if schema[0] is None and not m["files"]:
+            # first content on an empty untracked table: begin
+            # tracking here (like commit_overwrite), so later appends
+            # may evolve additively
+            schema = (self._merge_schema(None, df), None)
         wdf, wstats, wbloom = self._for_write(
-            self._carry_mapping(m), write_schema, df, stats_cols, bloom
+            self._carry_mapping(m), schema[0], df, stats_cols,
+            m.get("bloom_cols", []),
         )
-        files, stats, filemeta = self._write_fileset(wdf, wstats, wbloom)
-
-        def build(mm: dict) -> Optional[dict]:
-            if batch_id is not None and batch_id in mm["batch_ids"]:
-                return None
-            if self._constraints(mm) != self._constraints(m):
-                raise CommitConflict(
-                    "commit_append lost to a concurrent constraint "
-                    "change — re-read the table and retry (the batch "
-                    "must be re-validated)"
-                )
-            if mm.get("deltas") and mm.get("key_columns"):
-                # same shadowing hazard as the entry guard, arrived
-                # concurrently: rebasing this append over a delta that
-                # landed mid-commit would rank the fresh base rows
-                # below it for their keys
-                raise CommitConflict(
-                    "commit_append lost to a concurrent merge-on-read "
-                    "delta on a keyed table — appended rows would rank "
-                    "below it; use commit_delta or compact() first"
-                )
-            new = {
-                "version": mm["version"] + 1,
-                "files": mm["files"] + files,
-                "deltas": mm.get("deltas", []),
-                "key_columns": mm.get("key_columns"),
-                "batch_ids": mm["batch_ids"]
-                + ([batch_id] if batch_id is not None else []),
-                "stats": {**mm.get("stats", {}), **stats},
-                "filemeta": {**mm.get("filemeta", {}), **filemeta},
-                "bloom_cols": mm.get("bloom_cols", []),
-                "op_metrics": {
-                    "num_output_rows": sum(
-                        v.get("rows") or 0 for v in filemeta.values()
-                    )
-                },
-                # appends touch no existing file: the ANALYZE profile
-                # stays provenance-correct for the carried rows, the
-                # mapping/constraint properties ride, and every carried
-                # file keeps its deletion-vector entries
-                **self._carry_meta(mm),
-                **self._carry_mapping(mm),
-                **self._carry_dv(mm),
-            }
-            if mm.get("schema") is not None and self._mapping_enabled(mm):
-                if (
-                    mm["schema"] == m.get("schema")
-                    and mm.get("max_column_id") == m.get("max_column_id")
-                ):
-                    new["schema"] = write_schema
-                    new["max_column_id"] = write_max
-                else:
-                    merged = self._merge_schema(mm["schema"], df)
-                    bcols = set(df.columns)
-                    if merged == mm["schema"] and self._cm_assignment(
-                        mm, bcols
-                    ) == self._cm_assignment(m, bcols):
-                        new["schema"] = mm["schema"]
-                    else:
-                        raise CommitConflict(
-                            "append on a column-mapped table lost to a "
-                            "concurrent schema change (widened schema "
-                            "or re-keyed column assignment) — re-read "
-                            "the table and retry"
-                        )
-            elif mm.get("schema") is not None:
-                new["schema"] = self._merge_schema(mm["schema"], df)
-            elif not mm["files"]:
-                # first content on an empty untracked table: begin
-                # tracking here (like commit_overwrite), so later
-                # appends may evolve additively
-                new["schema"] = self._merge_schema(None, df)
-            if mm.get("ndv_cols"):
-                new["ndv"] = self._update_ndv(
-                    df, mm["ndv_cols"], mm.get("ndv", {})
-                )
-            return new
-
-        return self._commit_retrying(
-            m,
-            build,
-            frozenset({"delta", "metadata", "reorg", "dml", "append"}),
-            "commit_append",
+        return self._commit_rows(
+            m, "commit_append", batch_id,
+            written=self._write_fileset(wdf, wstats, wbloom), novel=df,
+            schema=schema,
         )
 
     def commit_merge(
@@ -5108,7 +5029,13 @@ class ManifestTable:
         """Copy-on-write keyed upsert: read the current snapshot, merge,
         publish the merged result as a new version.  Idempotent both by
         batch_id (replay skipped outright) and by merge semantics (the
-        keyed upsert is last-writer-wins).
+        keyed upsert is last-writer-wins).  Unlike :meth:`merge_into`
+        it may ADD columns (additive schema evolution), and it commits
+        a plain content ``rewrite`` — no ``dml`` stamp, no typed CDC,
+        so the change feed refuses to read across it.  The commit
+        rebases over pure-metadata commits and aborts on any content
+        commit or schema/mapping/constraint change underneath it
+        (:meth:`_commit_rows`' strict policy).
 
         With ``prune_col`` (a key column with recorded manifest stats),
         the merge is FILE-PRUNED — the lakehouse MERGE INTO shape: only
@@ -5125,6 +5052,8 @@ class ManifestTable:
         in the manifest and compact on read or on a schedule
         (merge-on-read), same protocol, more files per version.
         """
+        from pyspark.sql import functions as F
+
         from pypeline_spark.sinks.keyed import upsert
 
         m = self._read_manifest()
@@ -5151,8 +5080,6 @@ class ManifestTable:
         # incoming batch needs the CHECK/NOT NULL gate
         updates = self._apply_column_defaults(m, updates, "commit_merge")
         self._validate_constraints(m, updates, "commit_merge")
-        evolved_schema = None
-        carry_map = self._carry_mapping(m)
         if m.get("schema") is not None:
             # validate additive evolution UP FRONT against the tracked
             # schema (a type change must raise before any data writes —
@@ -5175,24 +5102,17 @@ class ManifestTable:
                 # identity columns are table-assigned: null-fill the
                 # batch so the merge frame is schema-complete (reads
                 # derive the real values from the row id)
-                from pyspark.sql import functions as F
-
                 for c in sorted(idset):
                     updates = updates.withColumn(
                         c, F.lit(None).cast("long")
                     )
-            evolved_schema = self._merge_schema(m["schema"], updates)
-            if self._mapping_enabled(m):
-                # new columns mint ids + physical names (existing ones
-                # keep theirs — _merge_schema preserves tracked fields)
-                evolved_schema, carry_map["max_column_id"] = (
-                    self._assign_column_ids(m, evolved_schema)
-                )
+        # new columns mint ids + physical names on a mapped table
+        # (existing ones keep theirs — _merge_schema preserves tracked
+        # fields)
+        schema = self._write_schema(m, updates)
 
         carried: list[str] = []
         if prune_col is not None and m["files"] and m.get("stats"):
-            from pyspark.sql import functions as F
-
             # The bounds job and the merge job must see the SAME rows: a
             # non-deterministic updates plan (sample(), uuid(), a
             # shuffle-order-dependent limit) re-evaluated by the merge
@@ -5232,16 +5152,12 @@ class ManifestTable:
         else:
             current = None  # nothing overlaps: the whole batch inserts
         if current is not None and rowtrack:
-            from pyspark.sql import functions as F
-
             updates = updates.join(
                 current.select(*key_columns, "__row_id__"),
                 on=list(key_columns),
                 how="left",
             )
         if current is not None:
-            from pyspark.sql import functions as F
-
             # table-level schema evolution (the Delta MERGE + mergeSchema
             # shape): the batch may ADD columns — null-fill the current
             # slice so the upsert carries them — but must cover every
@@ -5274,72 +5190,28 @@ class ManifestTable:
                 )
         elif m["files"] and m.get("schema") is None:
             # nothing overlapped the prune range on an UNTRACKED table:
-            # the batch inserts as new files beside carried ones, so a
-            # widened or narrowed batch would silently make the base
-            # heterogeneous with no tracked schema to null-fill it —
-            # peek ONE parquet footer (metadata, no data read) and
-            # require an exact column match
-            import pyarrow.parquet as pq
-
-            base_cols = set(
-                pq.ParquetFile(
-                    self._path(m["files"][0])
-                ).schema_arrow.names
-            )
-            if set(updates.columns) != base_cols:
-                raise ValueError(
-                    "batch columns "
-                    f"{sorted(set(updates.columns) ^ base_cols)} differ "
-                    "from the table's and nothing overlaps the prune "
-                    "range: schema changes on an untracked table need "
-                    "tracking first (commit_overwrite/compact) so "
-                    "existing files null-fill at read"
-                )
+            # the batch inserts as new files beside carried ones
+            self._require_base_columns(m, updates, "commit_merge")
         merged = updates if current is None else upsert(current, updates, key_columns)
         # materialize BEFORE the old files could ever be vacuumed;
         # rewritten files rebuild the table's recorded bloom index
-        # (carried files keep theirs via the stats carry-over below)
-        bloom = m.get("bloom_cols", [])
+        # (carried files keep theirs through the commit's carry)
         wdf, wstats, wbloom = self._for_write(
-            carry_map, evolved_schema, merged, stats_cols, bloom
+            self._carry_mapping(m), schema[0], merged, stats_cols,
+            m.get("bloom_cols", []),
         )
-        files, stats, filemeta = self._write_fileset(wdf, wstats, wbloom)
-        old_meta = m.get("filemeta", {})
-        new = {
-            "version": m["version"] + 1,
-            "files": carried + files,
-            "batch_ids": m["batch_ids"] + ([batch_id] if batch_id is not None else []),
-            "stats": {
-                **{f: m["stats"][f] for f in carried if f in m.get("stats", {})},
-                **stats,
-            },
-            "filemeta": {
-                **{f: old_meta[f] for f in carried if f in old_meta},
-                **filemeta,
-            },
-            "bloom_cols": bloom,
-            # ANALYZE profile + NDV sketch state ride along (an
-            # overwrite resets both); column-mapping state always
-            # rides; carried files keep their deletion vectors (the
-            # rewritten slice applied its own through _read_base)
-            **self._carry_meta(m),
-            **carry_map,
-            **self._carry_dv(m, carried),
-        }
-        if evolved_schema is not None:
-            new["schema"] = evolved_schema
-        elif not carried:
+        written = self._write_fileset(wdf, wstats, wbloom)
+        if schema[0] is None and not carried:
             # full rewrite on an untracked table: the merged frame IS
             # the whole content — begin tracking here
-            new["schema"] = self._merge_schema(None, merged)
-        if m.get("ndv_cols"):
-            # one O(batch) pass folds the update batch into the sketch;
-            # the union is an upper bound (replaced rows keep marks)
-            new["ndv"] = self._update_ndv(
-                updates, m["ndv_cols"], m.get("ndv", {})
-            )
-        self._publish(new)
-        return new["version"]
+            schema = (self._merge_schema(None, merged), None)
+        # a content rewrite with no change set: no dml stamp, no row
+        # metrics; the NDV union is an upper bound (replaced rows keep
+        # their marks)
+        return self._commit_rows(
+            m, "commit_merge", batch_id, written=written, novel=updates,
+            op_metrics={}, carried=carried, schema=schema,
+        )
 
     # -- predicate DML (DELETE FROM .. WHERE / UPDATE .. SET .. WHERE) ----------
     #
@@ -5554,7 +5426,8 @@ class ManifestTable:
     # which rows they emit.  The rest is one path: assignments compile
     # (and reject) before any fileset is written, every fileset goes
     # through _write_rows, and _commit_rows holds the one commit record
-    # and the one set of conflict rules.
+    # and the conflict rules — shared with commit_overwrite,
+    # commit_append, commit_merge and commit_delta.
 
     def _compile_assignments(
         self, m: dict, df: DataFrame, assignments: dict, what: str
@@ -5706,6 +5579,19 @@ class ManifestTable:
         )
         return files, meta, counts
 
+    def _write_schema(self, m: dict, df: DataFrame) -> tuple:
+        """``(schema, max_column_id)`` a fileset of ``df`` is written
+        under against snapshot ``m``: the tracked schema widened
+        additively by the batch, with ids and physical names minted
+        for new columns on a mapped table (``max_column_id`` is None
+        on an unmapped one); ``(None, None)`` on an untracked table."""
+        if m.get("schema") is None:
+            return None, None
+        schema = self._merge_schema(m["schema"], df)
+        if self._mapping_enabled(m):
+            return self._assign_column_ids(m, schema)
+        return schema, None
+
     def _commit_rows(
         self,
         m: dict,
@@ -5713,69 +5599,142 @@ class ManifestTable:
         batch_id: Optional[str],
         *,
         written: tuple,
-        cdc: tuple,
-        op_metrics: dict,
         novel: Optional[DataFrame],
+        op_metrics: Optional[dict] = None,
+        cdc: Optional[tuple] = None,
         keys: Optional[Sequence[str]] = None,
         carried: Optional[Sequence[str]] = None,
         dv: Optional[tuple] = None,
+        delta: bool = False,
+        schema: Optional[tuple] = None,
+        reset: Optional[dict] = None,
     ) -> int:
-        """The one commit of every row-level writer, built against
-        snapshot ``m`` and published through :meth:`_commit_retrying`
-        (rebasing over pure-metadata commits only).  ``written`` and
-        ``cdc`` are :meth:`_write_rows` results — the new base files
-        and the typed change set; ``novel`` holds the updated/inserted
-        rows the NDV sketch absorbs (None: no new values); ``keys``
-        are recorded when the table has no key columns yet.
+        """The one commit of every content writer, built against
+        snapshot ``m`` and published through :meth:`_commit_retrying`.
+        ``written`` is the new fileset ``(files, stats, filemeta)``;
+        ``novel`` the frame whose values the NDV sketch absorbs (None:
+        no new values); ``op_metrics`` the row metrics (default: the
+        written fileset's row count); ``keys`` are recorded when the
+        table has no key columns yet; ``schema`` is the ``(schema,
+        max_column_id)`` the fileset was written under (default: m's
+        tracked schema stands).
 
-        The two commit shapes differ only in data:
+        Each writer's commit shape is data:
 
-        - copy-on-write (``carried`` = the base files kept verbatim):
-          the new fileset replaces every other base file, deltas clear
-          (these writers refuse a delta'd table), and only carried
-          files keep their dv — the rewrite applied the rest
+        - ``carried`` = the base files kept verbatim (copy-on-write
+          MERGE/UPDATE/DELETE, ``commit_merge``; ``[]`` for an
+          overwrite): the new fileset replaces every other base file,
+          deltas clear (these writers refuse a delta'd table) and only
+          carried files keep their dv — the rewrite applied the rest
           physically;
-        - deletion vector (``carried=None``): the new fileset appends
-          to the base, whose files keep their stats, blooms and
-          filemeta verbatim as sound upper bounds; outstanding deltas
-          carry through untouched (their acted images are
-          dv-suppressed, their other keys still resolve by rank); and
-          ``dv`` — :meth:`_write_dv`'s ``(files, filemeta, counts)`` —
-          adds its suppression counts.
+        - ``carried=None``: the base and its deltas carry through
+          verbatim, their stats, blooms and filemeta sound upper
+          bounds; the new fileset appends to the base (deletion-vector
+          writers, ``commit_append``) or, with ``delta``, as one delta
+          fileset (``commit_delta``); ``dv`` —
+          :meth:`_write_dv`'s ``(files, filemeta, counts)`` — adds
+          suppression counts;
+        - ``cdc`` (a :meth:`_write_rows` result) stamps the commit
+          ``dml`` with its typed change set — the row-level writers;
+        - ``reset`` (an overwrite) records its table-level entries
+          instead of the carried ANALYZE profile, NDV state and key
+          columns: replaced content invalidates all three.
 
         Conflicts: a ledgered ``batch_id`` is a concurrent duplicate
-        (no commit); a changed file list, delta list or dv aborts
-        (only content commits move them, and those never rebase); so
-        does a changed schema, column mapping or constraint set — the
-        filesets were written under m's schema and physical names
-        (readers would misinterpret them under others), and the post
-        images were gated against m's constraints only, so a rebase
-        over a concurrent ADD CONSTRAINT would publish rows the new
-        invariant never saw."""
+        (no commit).  A blind append (``carried=None`` and no ``cdc``:
+        append, delta) takes the additive policy; it rebases over
+        other appends, deltas, predicate DML, metadata and reorgs as
+        long as the tip's schema still fits its fileset.  Every other
+        writer takes the strict policy, rebasing over pure metadata
+        only, and aborts on any moved file list or dv and on any
+        schema or column-mapping change — its filesets were written
+        under m's schema and physical names.  Both abort on a changed
+        constraint, column DEFAULT or generated column: the batch was
+        validated and filled against m's only.  A base-file append
+        also aborts on a concurrent delta — its rows would rank below
+        the delta's for their keys."""
         files, stats, filemeta = written
-        cdc_files, _cdc_stats, cdc_meta = cdc
+        cdc_files, _cdc_stats, cdc_meta = cdc or ([], {}, {})
         dv_files, dv_meta, counts = dv or ([], {}, {})
+        blind = carried is None and cdc is None
+        write_schema, write_max = schema or (m.get("schema"), None)
+        if op_metrics is None:
+            op_metrics = {
+                "num_output_rows": sum(
+                    v.get("rows") or 0 for v in filemeta.values()
+                )
+            }
+
+        def fills(x: dict) -> tuple:
+            return (
+                self._constraints(x),
+                x.get("column_defaults"),
+                x.get("generated_columns"),
+            )
 
         def build(mm: dict) -> Optional[dict]:
             if batch_id is not None and batch_id in mm["batch_ids"]:
                 return None
             if (
+                not delta
+                and (mm.get("deltas") or []) != (m.get("deltas") or [])
+            ) or (not blind and (
                 mm["files"] != m["files"]
-                or (mm.get("deltas") or []) != (m.get("deltas") or [])
                 or (mm.get("dv") or None) != (m.get("dv") or None)
-            ):
+            )):
                 raise CommitConflict(
-                    f"{what}: table content changed under the commit"
+                    f"{what}: table content changed under the commit "
+                    "(a concurrent rewrite, delta or deletion vector) "
+                    "— re-read the table and retry"
                 )
-            if (
+            if delta and mm.get("key_columns") not in (None, list(keys)):
+                raise ValueError(
+                    f"key_columns {list(keys)} != recorded "
+                    f"{mm['key_columns']}"
+                )
+            if fills(mm) != fills(m) or (not blind and (
                 mm.get("schema") != m.get("schema")
                 or self._carry_mapping(mm) != self._carry_mapping(m)
-                or self._constraints(mm) != self._constraints(m)
-            ):
+            )):
                 raise CommitConflict(
                     f"{what} lost to a concurrent schema/mapping/"
-                    "constraint change — re-read the table and retry"
+                    "constraint/default change — re-read the table and "
+                    "retry (the batch must be re-validated)"
                 )
+            mapping = self._carry_mapping(mm)
+            if (
+                mm.get("schema") == m.get("schema")
+                and mm.get("max_column_id") == m.get("max_column_id")
+            ):
+                new_schema = write_schema
+                if write_max is not None:
+                    mapping["max_column_id"] = write_max
+            elif self._mapping_enabled(mm):
+                # a blind append rebasing over a schema change: its
+                # files carry m's physical names, so it rebases only
+                # when the batch widens nothing and every batch column
+                # keeps its (id, physical) assignment — a column
+                # dropped and re-added keeps its logical (name, type)
+                # but re-keys both, and _to_logical would project the
+                # retired bytes away (nulled data winning resolution)
+                bcols = set(novel.columns) - {self._CT}
+                if self._merge_schema(
+                    mm["schema"], novel
+                ) != mm["schema"] or self._cm_assignment(
+                    mm, bcols
+                ) != self._cm_assignment(m, bcols):
+                    raise CommitConflict(
+                        f"{what} on a column-mapped table lost to a "
+                        "concurrent schema change (widened schema or "
+                        "re-keyed column assignment) — re-read the "
+                        "table and retry"
+                    )
+                new_schema = mm["schema"]
+            elif mm.get("schema") is not None:
+                # unmapped: the batch widens the tip's schema additively
+                new_schema = self._merge_schema(mm["schema"], novel)
+            else:
+                new_schema = None
             old_stats = mm.get("stats", {})
             old_meta = mm.get("filemeta", {})
             if carried is not None:
@@ -5800,9 +5759,16 @@ class ManifestTable:
                             ) + sum(counts.values()),
                         }
                     }
+            if delta:
+                deltas = deltas + [files]
+            else:
+                base = base + files
+            # ANALYZE profile + NDV sketch ride (provenance-kept; the
+            # HLL only ever absorbs, an upper bound) unless reset
+            meta = self._carry_meta(mm) if reset is None else reset
             new = {
                 "version": mm["version"] + 1,
-                "files": base + files,
+                "files": base,
                 "deltas": deltas,
                 "key_columns": mm.get("key_columns") or keys,
                 "batch_ids": mm["batch_ids"]
@@ -5811,29 +5777,35 @@ class ManifestTable:
                 "filemeta": {
                     **old_meta, **filemeta, **dv_meta, **cdc_meta,
                 },
-                "bloom_cols": m.get("bloom_cols", []),
-                # row-level changes ARE derivable across this commit:
-                # the CDC fileset is the exact change set
-                "dml": True,
-                "cdc_files": cdc_files,
+                "bloom_cols": mm.get("bloom_cols", []),
                 "op_metrics": op_metrics,
-                # ANALYZE profile + NDV sketch ride (provenance-kept;
-                # deletes only ever leave the HLL an upper bound)
-                **self._carry_meta(mm),
-                **self._carry_mapping(mm),
+                **meta,
+                **mapping,
                 **dv_state,
             }
-            if mm.get("schema") is not None:
-                new["schema"] = mm["schema"]
-            if mm.get("ndv_cols") and novel is not None:
-                # updated + inserted values are new marks; one
-                # O(changed rows) pass
+            if cdc is not None:
+                # row-level changes ARE derivable across this commit:
+                # the CDC fileset is the exact change set
+                new["dml"] = True
+                new["cdc_files"] = cdc_files
+            if new_schema is not None:
+                new["schema"] = new_schema
+            if meta.get("ndv_cols") and novel is not None:
+                # one O(batch) pass, folded against the rebased tip's
+                # sketch so no concurrent commit's marks are lost
                 new["ndv"] = self._update_ndv(
-                    novel, mm["ndv_cols"], mm.get("ndv", {})
+                    novel, meta["ndv_cols"], meta.get("ndv", {})
                 )
             return new
 
-        return self._commit_retrying(m, build, frozenset({"metadata"}), what)
+        # a blind append read nothing of the table, so it serializes
+        # after any commit but a rewrite; every other writer read a
+        # snapshot, so only pure metadata may land under it
+        rebase_over = frozenset(
+            {"delta", "metadata", "reorg", "dml", "append"} if blind
+            else {"metadata"}
+        )
+        return self._commit_retrying(m, build, rebase_over, what)
 
     def delete_where(
         self,
@@ -6520,9 +6492,11 @@ class ManifestTable:
         mode: str = "cow",
     ) -> int:
         """Conditional ``MERGE INTO`` — the full SQL/Delta merge
-        surface, of which :meth:`commit_merge` is the unconditional
-        last-writer-wins special case.  ``clauses`` is an ordered
-        sequence of ``(kind, condition, payload)``:
+        surface.  Its ``[update *, insert *]`` form is the keyed upsert
+        :meth:`commit_merge` also commits, but with a typed change set
+        and a fixed schema; the two share one commit builder.
+        ``clauses`` is an ordered sequence of ``(kind, condition,
+        payload)``:
 
         - ``("update", cond, {col: expr} | "*")`` — WHEN MATCHED
           [AND cond] THEN UPDATE SET ... (``"*"`` sets every target
@@ -7034,126 +7008,21 @@ class ManifestTable:
                 if batch is None
                 else batch.unionByName(tomb, allowMissingColumns=True)
             )
-        bloom = m.get("bloom_cols", [])
-        # the fileset is written ONCE, before the OCC loop — on a
-        # mapped table its physical column names are fixed by the
-        # schema/ids as of m, so a rebase may only proceed if that
-        # assignment is still the tip's (checked in build below)
-        write_schema = None
-        write_max = m.get("max_column_id")
-        if m.get("schema") is not None:
-            write_schema = self._merge_schema(m["schema"], batch)
-            if self._mapping_enabled(m):
-                write_schema, write_max = self._assign_column_ids(
-                    m, write_schema
-                )
+        # the fileset is written ONCE, before the OCC loop; on a mapped
+        # table its physical names are fixed by the assignment as of m
+        schema = self._write_schema(m, batch)
         wdf, wstats, wbloom = self._for_write(
-            self._carry_mapping(m), write_schema, batch, stats_cols, bloom
+            self._carry_mapping(m), schema[0], batch, stats_cols,
+            m.get("bloom_cols", []),
         )
-        files, stats, filemeta = self._write_fileset(wdf, wstats, wbloom)
-
-        def build(mm: dict) -> Optional[dict]:
-            # re-validated per rebase: a concurrent duplicate delivery
-            # of the same batch makes this commit a no-op (exactly-once
-            # holds across racing writers, not just sequential replays)
-            if batch_id is not None and batch_id in mm["batch_ids"]:
-                return None
-            if mm.get("key_columns") not in (None, keys):
-                raise ValueError(
-                    f"key_columns {keys} != recorded {mm['key_columns']}"
-                )
-            if self._constraints(mm) != self._constraints(m):
-                # a constraint added concurrently was never proven
-                # against this (already-written) batch — rebasing
-                # would publish unvalidated rows under the invariant
-                raise CommitConflict(
-                    "commit_delta lost to a concurrent constraint "
-                    "change — re-read the table and retry (the batch "
-                    "must be re-validated)"
-                )
-            new = {
-                "version": mm["version"] + 1,
-                "files": mm["files"],
-                "deltas": mm.get("deltas", []) + [files],
-                "key_columns": keys,
-                "batch_ids": mm["batch_ids"]
-                + ([batch_id] if batch_id is not None else []),
-                "stats": {**mm.get("stats", {}), **stats},
-                "filemeta": {**mm.get("filemeta", {}), **filemeta},
-                "bloom_cols": mm.get("bloom_cols", []),
-                "op_metrics": {
-                    "num_output_rows": sum(
-                        v.get("rows") or 0 for v in filemeta.values()
-                    )
-                },
-                # ANALYZE profile + NDV sketch state ride along (an
-                # overwrite resets both); column-mapping state always
-                # rides, and so do deletion vectors (the append leaves
-                # every base file untouched)
-                **self._carry_meta(mm),
-                **self._carry_mapping(mm),
-                **self._carry_dv(mm),
-            }
-            if mm.get("schema") is not None and self._mapping_enabled(mm):
-                # the delta files were written under the (schema, id)
-                # assignment as of m — rebasable only while the tip's
-                # assignment is the same, or the batch widens nothing
-                # (then the tip schema stands as-is); a concurrent
-                # schema change under a widening batch would leave the
-                # written physical names forked — abort (Delta aborts
-                # on concurrent metadata changes for the same reason)
-                if (
-                    mm["schema"] == m.get("schema")
-                    and mm.get("max_column_id") == m.get("max_column_id")
-                ):
-                    new["schema"] = write_schema
-                    new["max_column_id"] = write_max
-                else:
-                    merged = self._merge_schema(mm["schema"], batch)
-                    bcols = set(batch.columns) - {self._CT}
-                    if merged == mm["schema"] and self._cm_assignment(
-                        mm, bcols
-                    ) == self._cm_assignment(m, bcols):
-                        # logical fit alone is NOT enough: a column
-                        # concurrently dropped and re-added keeps its
-                        # logical (name, type) but mints a new
-                        # physical name — the pre-written fileset
-                        # stores the RETIRED physical bytes, which
-                        # _to_logical would silently project away
-                        # (nulled data winning resolution — ADVICE
-                        # r14).  Rebase only when every batch column's
-                        # (id, physical) assignment is unchanged.
-                        new["schema"] = mm["schema"]
-                    else:
-                        raise CommitConflict(
-                            "delta on a column-mapped table lost to a "
-                            "concurrent schema change (widened schema "
-                            "or re-keyed column assignment) — re-read "
-                            "the table and retry"
-                        )
-            elif mm.get("schema") is not None:
-                # additive table-level evolution: a batch with new
-                # columns widens the tracked schema (delete-only
-                # batches carry keys + marker and widen nothing)
-                new["schema"] = self._merge_schema(mm["schema"], batch)
-            if mm.get("ndv_cols"):
-                # folded against the REBASED tip's sketch — recomputed
-                # per retry so no concurrent commit's marks are lost
-                # (tombstone rows contribute key marks only: HLL is
-                # absorb-only, so deleted keys keeping marks preserves
-                # the documented upper-bound semantics)
-                new["ndv"] = self._update_ndv(
-                    batch, mm["ndv_cols"], mm.get("ndv", {})
-                )
-            return new
-
-        # blind append: serializes after concurrent deltas (same keys,
-        # re-checked above), base-file appends, metadata-only commits
-        # and content-preserving reorgs; content rewrites abort
-        return self._commit_retrying(
-            m, build,
-            frozenset({"delta", "metadata", "reorg", "dml", "append"}),
-            "commit_delta",
+        # a blind append: serializes after concurrent deltas (same
+        # keys, re-checked per rebase), base-file appends, predicate
+        # DML, metadata-only commits and content-preserving reorgs;
+        # content rewrites abort
+        return self._commit_rows(
+            m, "commit_delta", batch_id,
+            written=self._write_fileset(wdf, wstats, wbloom), novel=batch,
+            keys=keys, delta=True, schema=schema,
         )
 
     def read_resolved(

@@ -36,11 +36,8 @@ _FORBIDDEN = (T.ArrayType, T.MapType, T.StructType)
 
 
 @pytest.fixture(scope="module")
-def schemas(spark, sf_dir):
-    out = {}
-    for name, case in load_all().items():
-        out[name] = case.builder(spark, sf_dir).schema
-    return out
+def schemas(built_queries):
+    return {name: b.schema for name, b in built_queries.items()}
 
 
 def test_no_unhashable_output_columns(schemas):

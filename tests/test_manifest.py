@@ -6695,6 +6695,12 @@ _ROW_WRITERS = [
     for verb in ("merge", "update", "delete")
     for mode in ("cow", "dv")
 ]
+# the content writers outside the row-level DML surface share the same
+# commit builder: snapshot writers (strict) and blind appends (additive)
+_SNAPSHOT_WRITERS = [("commit_merge", None), ("commit_overwrite", None)]
+_CONTENT_WRITERS = _SNAPSHOT_WRITERS + [
+    ("commit_append", None), ("commit_delta", None),
+]
 
 
 class TestOccDvMergeInterleaving:
@@ -6709,10 +6715,13 @@ class TestOccDvMergeInterleaving:
     @staticmethod
     def _seed(spark, t, verb):
         # every writer form ends with key 3 at 999 among keys 0-9: the
-        # merge/update forms write it, the delete forms remove key 10
+        # merge/update/overwrite forms write it, the append form adds
+        # it, the delete forms remove key 10
         rows = (
             [(k, 999 if k == 3 else k * 10) for k in range(11)]
             if verb == "delete"
+            else [(k, k * 10) for k in range(10) if k != 3]
+            if verb == "commit_append"
             else [(k, k * 10) for k in range(10)]
         )
         t.commit_overwrite(
@@ -6722,6 +6731,21 @@ class TestOccDvMergeInterleaving:
 
     @staticmethod
     def _write(spark, t, verb, mode):
+        k3 = spark.createDataFrame([(3, 999)], "k long, a long")
+        if verb == "commit_merge":
+            return t.commit_merge(spark, k3, ["k"], batch_id="m")
+        if verb == "commit_overwrite":
+            return t.commit_overwrite(
+                spark.createDataFrame(
+                    [(k, 999 if k == 3 else k * 10) for k in range(10)],
+                    "k long, a long",
+                ),
+                batch_id="m",
+            )
+        if verb == "commit_append":
+            return t.commit_append(k3, batch_id="m")
+        if verb == "commit_delta":
+            return t.commit_delta(k3, ["k"], batch_id="m")
         if verb == "merge":
             return t.merge_into(
                 spark,
@@ -6736,7 +6760,7 @@ class TestOccDvMergeInterleaving:
             )
         return t.delete_where(spark, "k = 10", batch_id="m", mode=mode)
 
-    @pytest.mark.parametrize("verb, mode", _ROW_WRITERS)
+    @pytest.mark.parametrize("verb, mode", _ROW_WRITERS + _CONTENT_WRITERS)
     def test_dv_merge_rebases_over_racing_metadata(
         self, spark, tmp_path, verb, mode
     ):
@@ -6752,7 +6776,7 @@ class TestOccDvMergeInterleaving:
         got = {r["k"]: r["a"] for r in t.read_resolved(spark).collect()}
         assert got[3] == 999 and len(got) == 10
 
-    @pytest.mark.parametrize("verb, mode", _ROW_WRITERS)
+    @pytest.mark.parametrize("verb, mode", _ROW_WRITERS + _SNAPSHOT_WRITERS)
     def test_dv_merge_aborts_on_racing_schema_change(
         self, spark, tmp_path, verb, mode
     ):
@@ -7015,6 +7039,54 @@ class TestColumnDefaults:
     metadata-only declaration, default/generated fill on evolved reads
     (file-dated, never value-guessed), write-side fill + validation,
     DML/CDF/time-travel interaction, constraint composition."""
+
+    @pytest.mark.parametrize("fill", ["default", "generated"])
+    @pytest.mark.parametrize("writer", ["append", "delta"])
+    def test_blind_append_aborts_on_racing_fill_declaration(
+        self, spark, tmp_path, writer, fill
+    ):
+        """A batch filled against the old snapshot must not rebase over
+        a concurrent ADD COLUMN .. DEFAULT / generated column: its files
+        would be dated after the column's declaration, so reads would
+        never fill them and the column would read NULL."""
+        from pypeline_spark.sinks.manifest import CommitConflict
+
+        t = ManifestTable(str(tmp_path / "fillrace"))
+        t.commit_overwrite(
+            spark.createDataFrame(
+                [(k, k) for k in range(5)], "k long, a long"
+            ),
+            batch_id="seed",
+        )
+        b = ManifestTable(t.root)
+        decl = (
+            {"defaults": {"tier": "'N/A'"}}
+            if fill == "default"
+            else {"generated": {"tier": "cast(a as string)"}}
+        )
+        t._race_once = lambda: b.evolve_schema(
+            "tier string", batch_id="e", **decl
+        )
+        batch = spark.createDataFrame(
+            [(k, k) for k in range(10, 13)], "k long, a long"
+        )
+
+        def write():
+            if writer == "append":
+                return t.commit_append(batch, batch_id="w")
+            return t.commit_delta(batch, ["k"], batch_id="w")
+
+        with pytest.raises(CommitConflict, match="default"):
+            write()
+        assert "e" in t.applied_batch_ids()
+        assert "w" not in t.applied_batch_ids()
+        # the caller's retry fills the batch against the declared column
+        write()
+        got = {r["k"]: r["tier"] for r in t.read_resolved(spark).collect()}
+        want = "N/A" if fill == "default" else None
+        assert {k: got[k] for k in range(10, 13)} == {
+            k: want or str(k) for k in range(10, 13)
+        }
 
     @pytest.fixture()
     def cust(self, spark, sf_dir):

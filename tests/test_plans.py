@@ -413,13 +413,13 @@ class TestNoDriverCollects:
                         offenders.append((rel, b))
         assert not offenders, f"driver-side materialization in: {offenders}"
 
-    def test_builders_return_lazy_dataframes(self, spark, sf_dir, cases):
+    def test_builders_return_lazy_dataframes(self, built_queries):
         from pyspark.sql import DataFrame
 
-        for name, case in cases.items():
+        for name, built in built_queries.items():
             if name == "q_pipeline_etl":  # runs a full ETL by design
                 continue
-            assert isinstance(case.builder(spark, sf_dir), DataFrame), name
+            assert issubclass(built.type, DataFrame), name
 
 
 class TestNoNestedLoopSweep:
@@ -449,19 +449,16 @@ class TestNoNestedLoopSweep:
         "q_stream_dedup", "q_running_totals", "q_stream_join",
     }
 
-    def test_every_batch_query_avoids_nested_loops(self, spark, sf_dir, cases):
+    def test_every_batch_query_avoids_nested_loops(self, built_queries):
         """Sweep: no registered batch operator may plan a
         BroadcastNestedLoopJoin/CartesianProduct unless its semantics
         ARE a cross product — the blanket guard that keeps future
         operators from quietly shipping an all-pairs plan."""
-        from pypeline_spark.plans import has_nested_loop
-
-        spark.catalog.clearCache()
         offenders = []
-        for name, case in cases.items():
+        for name, built in built_queries.items():
             if name in self.INTENTIONAL or name in self.STREAMING:
                 continue
-            if has_nested_loop(case.builder(spark, sf_dir)):
+            if built.nested_loop:
                 offenders.append(name)
         assert not offenders, offenders
 
