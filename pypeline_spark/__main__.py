@@ -10,8 +10,9 @@ Pypeline.py:11-35); this is the same lifecycle with the connections
 replaced by directories of parquet tables — every ``*.parquet`` file
 or subdirectory under ``--source-dir`` is registered as a temp view
 (what ``extract_query`` sees), and the target catalog persists merged
-tables under ``--target-dir`` (read-modify-write parquet; swaps to
-Delta/Iceberg MERGE when those jars are present).
+tables under ``--target-dir`` (keyed steps as footer-pruned merges
+that rewrite only the files a batch touches, other steps as
+read-modify-write parquet).
 
 Scale: nothing here is driver-side compute — the CLI only compiles
 the validated spec and triggers the runner; all data movement is the

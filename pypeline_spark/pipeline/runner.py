@@ -25,7 +25,7 @@ from pypeline_spark.pipeline.spec import PipelineConfig, PypeSpec
 from pypeline_spark.pipeline.transformers import apply_transform_chain, load_transformers
 from pypeline_spark.sinks.history import cdc_apply
 from pypeline_spark.sinks.keyed import (
-    MemoryCatalog, dedup_ingest, delete_by_keys, update_only, upsert,
+    MemoryCatalog, _dedupe_last_writer, dedup_ingest, delete_by_keys, update_only, upsert,
 )
 
 log = logging.getLogger("pypeline_spark")
@@ -73,9 +73,10 @@ class Pypeline:
     """Compile + run named pipelines from a validated config.
 
     ``catalog`` is the mutable target database for non-lakehouse
-    steps: a get/put catalog (MemoryCatalog, ParquetCatalog) or a
-    merge-capable one (JdbcMergeCatalog, DeltaCatalog).  ``lakehouse``
-    is the LakehouseCatalog for ``type: lakehouse`` steps.  Source
+    steps: a get/put catalog (MemoryCatalog) or a merge-capable one
+    (ParquetCatalog's file-pruned merges, JdbcMergeCatalog,
+    DeltaCatalog).  ``lakehouse`` is the LakehouseCatalog for
+    ``type: lakehouse`` steps.  Source
     tables are whatever temp views are registered on the session — the
     extract query runs through ``spark.sql`` (the native form of the
     reference shipping extract_query to MySQL, ref: Pype.py:36).
@@ -150,10 +151,10 @@ class Pypeline:
         """Load one step's batch into its target; return the target's view.
 
         Lakehouse steps commit through ManifestTable with the batch
-        ledger; keyed steps on a merge-capable catalog (JdbcMergeCatalog,
-        DeltaCatalog) run its in-place MERGE, so the target rows never
-        move through Spark; every other step reads the target, computes
-        its new value and puts it."""
+        ledger; keyed steps on a merge-capable catalog (ParquetCatalog,
+        JdbcMergeCatalog, DeltaCatalog) run its native MERGE, which
+        rewrites only what the batch touches; every other step reads the
+        target, computes its new value and puts it."""
         name = spec.target_table
         if spec.type == "lakehouse":
             return self._write_lakehouse(spec, df, ph)
@@ -185,8 +186,10 @@ class Pypeline:
         """The target's next value on a get/put catalog."""
         if target is None and spec.type in ("update", "delete"):
             raise ValueError(f"{spec.type} target {spec.target_table!r} does not exist")
-        if sink is not None:  # the first upsert creates the table
-            return df if target is None else sink(target, df, **kwargs)
+        if sink is not None:  # the first upsert creates the table, one row per key
+            if target is None:
+                return _dedupe_last_writer(df, spec.key_columns, None)
+            return sink(target, df, **kwargs)
         if spec.type == "cdc":
             if target is None:
                 # first batch against an empty base: survivors only

@@ -18,24 +18,29 @@ Reference semantics being re-expressed (file:line cites into
   non-key columns desc) so retried Spark tasks can't change the answer.
 
 Scale design: these are pure DataFrame plans — one shuffle on the key
-columns for the join, with the updates side broadcast when small.  On a
-real lakehouse the same interface binds to Delta/Iceberg ``MERGE INTO``
-(transactional, file-pruned); the plain-parquet read-modify-write here
-keeps v1 dependency-free.  Idempotence (rerunning the same merge is a
-no-op) preserves the reference's crash-recovery story of per-batch
-commits + re-runnable keyed loads.
+columns for the join, with the updates side broadcast when small.
+``ParquetCatalog`` runs them as file-pruned merges, the way Delta Lake's
+MERGE does (Armbrust et al., VLDB 2020): parquet footer min/max on the
+first key pick the files a batch can touch, the sink rewrites only
+those, and every other file is carried into the new table version by
+hard link.  Idempotence (rerunning the same merge is a no-op) preserves
+the reference's crash-recovery story of per-batch commits + re-runnable
+keyed loads.
 """
 
 from __future__ import annotations
 
+import math
 import os
-from typing import Optional, Sequence
+import shutil
+from typing import Callable, Optional, Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from pypeline_spark.registry import query
-from pypeline_spark.session import load_table
+from pypeline_spark.session import load_table, max_split_bytes
 
 
 def _dedupe_last_writer(
@@ -219,12 +224,35 @@ class MemoryCatalog:
             df.createOrReplaceTempView(name)
 
 
+def _prune_family(dt: T.DataType) -> Optional[str]:
+    """The first-key types a merge prunes files by: integral, (binary
+    collation) string and date values have no NaN, their parquet
+    footer order is Spark's order, and they need no time-zone
+    conversion.  Any other type (decimal, float, timestamp, ...)
+    touches every file."""
+    if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
+        return "integral"
+    if isinstance(dt, T.StringType) and getattr(dt, "collation", "UTF8_BINARY") == "UTF8_BINARY":
+        return "string"
+    if isinstance(dt, T.DateType):
+        return "date"
+    return None
+
+
 class ParquetCatalog:
     """Target 'database' as a directory of parquet tables.
 
-    Read-modify-write per merge; the production analogue is Delta/
-    Iceberg MERGE (transactional + file pruning), bound behind the
-    same get/put interface when those jars are present.
+    Keyed steps run as native file-pruned merges (``merge_upsert``,
+    ``merge_update_only``, ``merge_delete``): the join sink reads and
+    rewrites only the files whose footer first-key range may overlap
+    the batch's, writes its result range-clustered on that key, and
+    every other file is hard-linked into the new version under its own
+    name.  Every other step (and a keyed step on a missing table) is
+    read-modify-write through ``get``/``put``.
+
+    ``get`` reuses the schema the catalog last read or wrote for the
+    same table directory (path + inode + ctime: every swap makes a new
+    directory), so a read starts no schema-inference job.
 
     Concurrency contract: SINGLE WRITER per table (the reference's
     per-pipeline target model).  Readers in other processes are safe
@@ -247,6 +275,9 @@ class ParquetCatalog:
         # the CLI's second step resolved a stale view after any
         # streaming query had run in the process).
         self._spark = spark
+        # table path -> (directory identity, schema) of its last read
+        # or merge; a plain put drops the entry
+        self._schemas: dict = {}
         os.makedirs(root, exist_ok=True)
 
     def _session(self) -> SparkSession:
@@ -257,8 +288,15 @@ class ParquetCatalog:
     def _path(self, name: str) -> str:
         return os.path.join(self.root, name)
 
+    @staticmethod
+    def _identity(path: str) -> tuple:
+        # the ctime guards against a later directory reusing the inode
+        st = os.stat(path)
+        return (st.st_ino, st.st_ctime_ns)
+
     def get(self, name: str) -> Optional[DataFrame]:
         path = self._path(name)
+        reader = self._session().read
         if not os.path.exists(path):
             # Crash window of a prior put (table renamed aside, new one
             # not yet in place): READ the aside copy, don't rename it —
@@ -267,10 +305,29 @@ class ParquetCatalog:
             old = path + ".__old__"
             if not os.path.exists(old):
                 return None
-            path = old
-        return self._session().read.parquet(path)
+            return reader.parquet(old)
+        ident = self._identity(path)
+        known = self._schemas.get(path)
+        if known is not None and known[0] == ident:
+            return reader.schema(known[1]).parquet(path)
+        df = reader.parquet(path)
+        self._schemas[path] = (ident, df.schema)
+        return df
 
-    def put(self, name: str, df: DataFrame) -> None:
+    def put(
+        self,
+        name: str,
+        df: DataFrame,
+        carry: Sequence[str] = (),
+        max_rows_per_file: int = 0,
+    ) -> None:
+        """Make ``df`` plus the ``carry`` files the table's new version.
+
+        ``carry`` names data files of the standing version that the new
+        one keeps as they are: each is hard-linked, with its checksum,
+        into the new version under its own name.
+        ``max_rows_per_file`` (0: no limit) caps the rows of each file
+        ``df`` writes."""
         # Materialize before overwrite: the new value may read the old
         # files (read-modify-write), so write ONCE to a temp dir, then
         # swap directories.  (A write-then-rewrite-to-final would double
@@ -280,17 +337,26 @@ class ParquetCatalog:
         # is the only copy — a crash at any point leaves either the old
         # or the new version recoverable (_recover), and the keyed merges
         # feeding put are idempotent so the rerun converges.
-        import shutil
-
         path = self._path(name)
         tmp = path + ".__tmp__"
         old = path + ".__old__"
+        self._schemas.pop(path, None)
         shutil.rmtree(tmp, ignore_errors=True)
         # df may lazily read `path` (normal read-modify-write) OR `old`
         # (get() fell back to the aside copy after a prior crash inside
         # the swap window) — neither is touched until tmp stands, so
         # the write always has its complete source.
-        df.write.mode("overwrite").parquet(tmp)
+        writer = df.write.mode("overwrite")
+        if max_rows_per_file:
+            writer = writer.option("maxRecordsPerFile", max_rows_per_file)
+        writer.parquet(tmp)
+        for f in carry:
+            # parquet files are never modified in place, so the new
+            # version can share the standing one's
+            os.link(os.path.join(path, f), os.path.join(tmp, f))
+            crc = f".{f}.crc"
+            if os.path.exists(os.path.join(path, crc)):
+                os.link(os.path.join(path, crc), os.path.join(tmp, crc))
         if os.path.exists(path):
             shutil.rmtree(old, ignore_errors=True)  # stale from a completed put
             os.rename(path, old)  # aside, not rmtree: keep a complete copy
@@ -298,6 +364,141 @@ class ParquetCatalog:
         # aside copy — keep it standing until the new table is in place.
         os.rename(tmp, path)
         shutil.rmtree(old, ignore_errors=True)
+
+    # -- native keyed merges ------------------------------------------------
+
+    def merge_upsert(
+        self,
+        name: str,
+        updates: DataFrame,
+        key_columns: Sequence[str] = ("id",),
+        fields_excluded_from_update: Sequence[str] = (),
+        order_col: Optional[str] = None,
+    ) -> None:
+        """Keyed upsert (:func:`upsert`); the first load of a missing
+        table keeps one row per key."""
+        keys = list(key_columns)
+        self._merge(
+            name, updates, keys[0],
+            lambda t, u: upsert(t, u, keys, fields_excluded_from_update, order_col),
+            first_load=lambda u: _dedupe_last_writer(u, keys, order_col),
+        )
+
+    def merge_update_only(
+        self,
+        name: str,
+        updates: DataFrame,
+        key_columns: Sequence[str] = ("id",),
+        fields_excluded_from_update: Sequence[str] = (),
+        order_col: Optional[str] = None,
+    ) -> None:
+        """Keyed update (:func:`update_only`) of an existing table."""
+        keys = list(key_columns)
+        self._merge(
+            name, updates, keys[0],
+            lambda t, u: update_only(t, u, keys, fields_excluded_from_update, order_col),
+            op="update",
+        )
+
+    def merge_delete(self, name: str, keys_df: DataFrame, identifier: str) -> None:
+        """Delete by key (:func:`delete_by_keys`) from an existing table."""
+        self._merge(
+            name, keys_df, identifier,
+            lambda t, u: delete_by_keys(t, u, identifier),
+            op="delete",
+        )
+
+    def _merge(
+        self,
+        name: str,
+        batch: DataFrame,
+        key: str,
+        sink: Callable[[DataFrame, DataFrame], DataFrame],
+        first_load: Optional[Callable[[DataFrame], DataFrame]] = None,
+        op: str = "upsert",
+    ) -> None:
+        """Apply ``sink(target, batch)`` to the files it can change.
+
+        A target row can only match a batch row whose first key
+        ``key`` equals its own, non-NULL, so every file whose footer
+        range on ``key`` is disjoint from the batch's [min, max] comes
+        through the sink unchanged and is carried instead.  The sink
+        runs over the other ("touched") files; its result is written
+        range-clustered on ``key`` in files of at most
+        ``ceil(table_rows / defaultParallelism)`` rows, so later
+        batches touch few of them.  Only the upsert (``first_load``
+        set) inserts rows; it alone creates a missing table."""
+        from pypeline_spark.sinks.manifest import ManifestTable as MT
+
+        target = self.get(name)
+        path = self._path(name)
+        if target is None:
+            if first_load is None:
+                raise ValueError(f"{op} target {name!r} does not exist")
+            self.put(name, first_load(batch))
+            return
+        files = sorted(
+            f for f in os.listdir(path) if not f.startswith(("_", "."))
+        ) if os.path.isdir(path) else None
+        if files is None or not all(os.path.isfile(os.path.join(path, f)) for f in files):
+            # the crash window (only the aside copy stands) or a nested
+            # layout: read-modify-write the whole table
+            self.put(name, sink(target, batch))
+            return
+
+        # one job reads the batch into its checkpoint and returns its key
+        # bounds (a single partition needs no exchange before the
+        # aggregate); the sink then reads the checkpoint
+        batch = batch.localCheckpoint(eager=False)
+        bounds = MT._collect_index_metadata(
+            batch.coalesce(1).agg(
+                F.min(key).alias("lo"), F.max(key).alias("hi"), F.count(F.lit(1)).alias("n")
+            )
+        ).to_pylist()[0]
+        lo, hi = MT._prune_canon(bounds["lo"]), MT._prune_canon(bounds["hi"])
+        inserted = bounds["n"] if first_load is not None else 0
+        family = _prune_family(target.schema[key].dataType)
+        prunes = family is not None and family == _prune_family(batch.schema[key].dataType)
+
+        import pyarrow.parquet as pq
+
+        rows, touched, carry = {}, [], []
+        for f in files:
+            p = os.path.join(path, f)
+            rows[f] = pq.read_metadata(p).num_rows
+            rng = MT._footer_stats(p, [key]).get(key) if prunes else None
+            if lo is not None and (rng is None or not MT._prune_disjoint(lo, hi, *rng)):
+                touched.append(f)
+            else:  # provably unmatched, or the batch holds no non-NULL key
+                carry.append(f)
+        if not touched and not inserted:
+            return  # the batch changes nothing: no write, no swap
+
+        spark = self._session()
+        cap = max(1, math.ceil(
+            (sum(rows.values()) + inserted) / spark.sparkContext.defaultParallelism
+        ))
+        out_rows = sum(rows[f] for f in touched) + inserted
+        file_name = target.metadataColumn("_metadata").getField("file_name")
+        out = sink(target.filter(file_name.isin(touched)), batch)
+        if [(f.name, f.dataType) for f in out.schema] != [
+            (f.name, f.dataType) for f in target.schema
+        ]:
+            # carried and rewritten files must share one schema (a USING
+            # join puts the key columns first; a union may widen a type)
+            out = out.select(
+                [F.col(f"`{f.name}`").cast(f.dataType).alias(f.name) for f in target.schema]
+            )
+        if sum(os.path.getsize(os.path.join(path, f)) for f in touched) > max_split_bytes(spark):
+            out = out.repartitionByRange(math.ceil(out_rows / cap), key)
+        else:
+            # touched files that fit one scan split are read by one task
+            # anyway: one sorted writer then costs no parallelism and
+            # needs no sampling job or shuffle
+            out = out.coalesce(1)
+        out = out.sortWithinPartitions(key)
+        self.put(name, out, carry=carry, max_rows_per_file=cap)
+        self._schemas[path] = (self._identity(path), target.schema)
 
 
 # ---------------------------------------------------------------------------

@@ -64,33 +64,6 @@ def write_zordered(
     )
 
 
-def file_column_ranges(path: str, columns: Sequence[str]) -> list[dict]:
-    """Per-file (min, max) of each column, read from parquet footers —
-    the same stats a data-skipping reader uses.  Driver-side metadata
-    only; no row data is read."""
-    import pyarrow.parquet as pq
-
-    out = []
-    for name in sorted(os.listdir(path)):
-        if not name.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(os.path.join(path, name)).metadata
-        ranges: dict = {"file": name}
-        for col in columns:
-            lo, hi = None, None
-            for rg in range(md.num_row_groups):
-                row_group = md.row_group(rg)
-                for ci in range(row_group.num_columns):
-                    c = row_group.column(ci)
-                    if c.path_in_schema == col and c.statistics is not None:
-                        s = c.statistics
-                        lo = s.min if lo is None else min(lo, s.min)
-                        hi = s.max if hi is None else max(hi, s.max)
-            ranges[col] = (lo, hi)
-        out.append(ranges)
-    return out
-
-
 def plan_compaction(
     path: str, target_bytes: int = 128 * 1024 * 1024, min_fill: float = 0.5
 ) -> list[list[str]]:

@@ -17,15 +17,13 @@ from typing import TYPE_CHECKING, Optional, Sequence
 
 from pyspark.sql import DataFrame
 
-from pypeline_spark.sinks.keyed import ParquetCatalog, _dedupe_last_writer, upsert
-
 if TYPE_CHECKING:  # annotation only — avoids an import cycle at runtime
     from pypeline_spark.sinks.manifest import ManifestTable
 
 
 def stream_upsert(
     stream_df: DataFrame,
-    catalog: ParquetCatalog,
+    catalog,
     table: str,
     key_columns: Sequence[str],
     order_col: Optional[str] = None,
@@ -33,37 +31,24 @@ def stream_upsert(
 ):
     """Continuously merge a stream into catalog[table] by key.
 
-    Returns the StreamingQuery (caller awaits termination).  Each batch:
-    read current target, keyed-merge the batch (last-writer-wins within
-    the batch by order_col), swap-write the result.  First batch with no
-    existing target just dedupes and writes.
+    Returns the StreamingQuery (caller awaits termination).  Each batch
+    is one ``catalog.merge_upsert`` (ParquetCatalog, JdbcMergeCatalog,
+    DeltaCatalog), last-writer-wins within the batch by ``order_col``;
+    the first batch creates the table with one row per key.
     """
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # merge-capable catalogs (JdbcMergeCatalog / DeltaCatalog) take
-        # the batch as ONE in-place transactional MERGE — the streaming
-        # form of the reference's per-batch commit into a live database
+        # the streaming form of the reference's per-batch commit
         # (ref: Pype.py:148).  Catalogs with a batch ledger get the
         # Spark batch id so application is exactly-once even for
         # non-idempotent reruns; otherwise a replayed batch re-merges
         # to a no-op (idempotence).
-        if hasattr(catalog, "merge_upsert"):
-            kwargs = {}
-            if hasattr(catalog, "_merge_with_ledger"):
-                kwargs["batch_id"] = f"stream-{table}-{batch_id}"
-            catalog.merge_upsert(
-                table, batch_df, key_columns=key_columns, order_col=order_col,
-                **kwargs,
-            )
-            return
-        target = catalog.get(table)
-        if target is None:
-            merged = _dedupe_last_writer(batch_df, list(key_columns), order_col)
-        else:
-            merged = upsert(
-                target, batch_df, key_columns=key_columns, order_col=order_col
-            )
-        catalog.put(table, merged)
+        kwargs = {}
+        if hasattr(catalog, "_merge_with_ledger"):
+            kwargs["batch_id"] = f"stream-{table}-{batch_id}"
+        catalog.merge_upsert(
+            table, batch_df, key_columns=key_columns, order_col=order_col, **kwargs,
+        )
 
     writer = stream_df.writeStream.foreachBatch(_merge_batch).trigger(availableNow=True)
     if checkpoint_dir:
