@@ -174,16 +174,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def max_split_bytes(spark: SparkSession) -> int:
-    """``spark.sql.files.maxPartitionBytes`` in bytes: the most one
-    parquet scan task reads."""
-    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").lower()
-    units = {"k": 1024, "m": 1024**2, "g": 1024**3}
-    raw = raw.removesuffix("b")
-    mult = units.get(raw[-1:], 1)
-    return int(raw.rstrip("kmg") or "0") * mult or 134217728
-
-
 def scan_parallelism(spark: SparkSession, sf_dir: str, *tables: str) -> int:
     """Repartition width for compute-heavy work fed by an under-split scan,
     or 0 when the scan already parallelizes on its own.
@@ -205,7 +195,11 @@ def scan_parallelism(spark: SparkSession, sf_dir: str, *tables: str) -> int:
     values involved stay cluster-tunable; nothing here is local-mode
     specific.
     """
-    max_split = max_split_bytes(spark)
+    raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728").lower()
+    units = {"k": 1024, "m": 1024**2, "g": 1024**3}
+    raw = raw.removesuffix("b")
+    mult = units.get(raw[-1:], 1)
+    max_split = int(raw.rstrip("kmg") or "0") * mult or 134217728
     par = spark.sparkContext.defaultParallelism
     total = 0
     for name in tables:

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pypeline_spark.registry import query
-from pypeline_spark.session import load_table, max_split_bytes
+from pypeline_spark.session import load_table
 
 
 def _dedupe_last_writer(
@@ -239,6 +239,30 @@ def _prune_family(dt: T.DataType) -> Optional[str]:
     return None
 
 
+def _fold_targets(lo, hi, ranges: dict, rows: dict, touched: list, cap: int) -> list:
+    """Untouched files an inserting batch also rewrites.
+
+    On each side where no touched file's footer range reaches the
+    batch's ``lo`` (``hi``), the nearest file on that side joins the
+    rewrite when it holds fewer than ``cap`` rows.  Inserts past every
+    touched range then fill that file instead of starting one of their
+    own, so a run of batches above (or below) every stored key keeps
+    the file count within about twice table_rows / cap."""
+    spans = [ranges[f] for f in touched if ranges[f] is not None]
+    # an untouched file with a known range lies wholly below or above
+    rest = [f for f in ranges if f not in touched and ranges[f] is not None]
+    out = []
+    if not any(r[0] <= lo for r in spans):
+        below = [f for f in rest if ranges[f][1] < lo]
+        if below:
+            out.append(max(below, key=lambda f: ranges[f][1]))
+    if not any(r[1] >= hi for r in spans):
+        above = [f for f in rest if ranges[f][0] > hi]
+        if above:
+            out.append(min(above, key=lambda f: ranges[f][0]))
+    return [f for f in out if rows[f] < cap]
+
+
 class ParquetCatalog:
     """Target 'database' as a directory of parquet tables.
 
@@ -424,10 +448,12 @@ class ParquetCatalog:
         range on ``key`` is disjoint from the batch's [min, max] comes
         through the sink unchanged and is carried instead.  The sink
         runs over the other ("touched") files; its result is written
-        range-clustered on ``key`` in files of at most
-        ``ceil(table_rows / defaultParallelism)`` rows, so later
-        batches touch few of them.  Only the upsert (``first_load``
-        set) inserts rows; it alone creates a missing table."""
+        by ``ceil(out_rows / cap)`` range partitions on ``key`` in files
+        of at most ``cap = ceil(table_rows / defaultParallelism)``
+        rows, so later batches touch few of them.  Only the upsert
+        (``first_load`` set) inserts rows; it alone creates a missing
+        table, and its inserts past the touched files fold into a
+        neighbouring small file (:func:`_fold_targets`)."""
         from pypeline_spark.sinks.manifest import ManifestTable as MT
 
         target = self.get(name)
@@ -462,22 +488,26 @@ class ParquetCatalog:
 
         import pyarrow.parquet as pq
 
-        rows, touched, carry = {}, [], []
+        rows, ranges = {}, {}
         for f in files:
             p = os.path.join(path, f)
-            rows[f] = pq.read_metadata(p).num_rows
-            rng = MT._footer_stats(p, [key]).get(key) if prunes else None
-            if lo is not None and (rng is None or not MT._prune_disjoint(lo, hi, *rng)):
-                touched.append(f)
-            else:  # provably unmatched, or the batch holds no non-NULL key
-                carry.append(f)
-        if not touched and not inserted:
-            return  # the batch changes nothing: no write, no swap
-
+            meta = pq.read_metadata(p)
+            rows[f] = meta.num_rows
+            ranges[f] = MT._footer_stats(p, [key], meta).get(key) if prunes else None
+        # a file is touched unless it provably holds no key of the batch
+        # (a batch without a non-NULL key matches nothing)
+        touched = [] if lo is None else [
+            f for f in files if ranges[f] is None or not MT._prune_disjoint(lo, hi, *ranges[f])
+        ]
         spark = self._session()
         cap = max(1, math.ceil(
             (sum(rows.values()) + inserted) / spark.sparkContext.defaultParallelism
         ))
+        if inserted and lo is not None:
+            touched += _fold_targets(lo, hi, ranges, rows, touched, cap)
+        if not touched and not inserted:
+            return  # the batch changes nothing: no write, no swap
+
         out_rows = sum(rows[f] for f in touched) + inserted
         file_name = target.metadataColumn("_metadata").getField("file_name")
         out = sink(target.filter(file_name.isin(touched)), batch)
@@ -489,14 +519,11 @@ class ParquetCatalog:
             out = out.select(
                 [F.col(f"`{f.name}`").cast(f.dataType).alias(f.name) for f in target.schema]
             )
-        if sum(os.path.getsize(os.path.join(path, f)) for f in touched) > max_split_bytes(spark):
-            out = out.repartitionByRange(math.ceil(out_rows / cap), key)
-        else:
-            # touched files that fit one scan split are read by one task
-            # anyway: one sorted writer then costs no parallelism and
-            # needs no sampling job or shuffle
-            out = out.coalesce(1)
-        out = out.sortWithinPartitions(key)
+        # about cap rows a range partition, so a large batch keeps its
+        # parallelism; a single partition needs no sampling job
+        parts = max(1, math.ceil(out_rows / cap))
+        out = out.repartitionByRange(parts, key).sortWithinPartitions(key)
+        carry = [f for f in files if f not in touched]
         self.put(name, out, carry=carry, max_rows_per_file=cap)
         self._schemas[path] = (self._identity(path), target.schema)
 

@@ -3616,9 +3616,10 @@ class ManifestTable:
         return names, stats, filemeta
 
     @staticmethod
-    def _footer_stats(path: str, cols: Sequence[str]) -> dict:
+    def _footer_stats(path: str, cols: Sequence[str], meta=None) -> dict:
         """Per-column [min, max] from the parquet footer's row-group
-        statistics (no data pages read).  A column with missing stats
+        statistics (no data pages read; ``meta``, when given, is the
+        file's already-read footer).  A column with missing stats
         in any row group is omitted — readers treat a missing stat as
         'unknown, cannot prune' (conservative).  Timestamp/date stats
         canonicalize to ISO strings (fixed-shape, lexicographic order
@@ -3629,7 +3630,8 @@ class ManifestTable:
         import pyarrow.parquet as pq
 
         canon = ManifestTable._prune_canon
-        meta = pq.ParquetFile(path).metadata
+        if meta is None:
+            meta = pq.ParquetFile(path).metadata
         idx = {meta.schema.column(i).name: i for i in range(meta.num_columns)}
         out: dict = {}
         for col in cols:

@@ -196,16 +196,18 @@ class TestMergeEqualsJoinSink:
 
     def test_batch_outside_every_file(self, spark, base):
         cat = _copy(base, spark, "outside")
+        path = cat._path("outside")
         before, after = _merge_equals_sink(
             cat, "outside", "merge_update_only", _batch(spark, 5000, 5010), key_columns=["k"]
         )
         assert before == after
+        stored = sum(_footer_rows(path, f) for f in after)
         before, after = _merge_equals_sink(
             cat, "outside", "merge_upsert", _batch(spark, 5000, 5010), key_columns=["k"]
         )
-        assert _carried(before, after) == set(before)  # only the inserts are new
-        new = [f for f in after if f not in before]
-        assert sum(_footer_rows(cat._path("outside"), f) for f in new) == 10
+        # the inserts fold into at most the nearest file below them
+        assert len(set(before) - _carried(before, after)) <= 1
+        assert sum(_footer_rows(path, f) for f in after) == stored + 10
 
 
 def test_carried_files_keep_inode_and_mtime(spark, base):
@@ -226,23 +228,36 @@ def test_carried_files_keep_inode_and_mtime(spark, base):
         assert _footer_rows(path, f) <= cap
 
 
-def test_rewrite_beyond_one_scan_split_is_range_partitioned(spark, base):
-    """Touched files larger than one scan split are rewritten by range
-    partitions; the result and the file cap hold the same."""
+def test_large_insert_only_batch_keeps_its_parallelism(spark, base):
+    """A batch of new keys many file caps large is written by several
+    range partitions, not one task; each file holds at most the cap."""
     cat = _copy(base, spark, "wide")
-    key = "spark.sql.files.maxPartitionBytes"
-    saved = spark.conf.get(key)
-    spark.conf.set(key, "1k")
-    try:
-        before, after = _merge_equals_sink(
-            cat, "wide", "merge_upsert", _batch(spark, 0, 500), key_columns=["k"]
-        )
-    finally:
-        spark.conf.set(key, saved)
-    assert not _carried(before, after)
+    before, after = _merge_equals_sink(
+        cat, "wide", "merge_upsert", _batch(spark, 1000, 1600), key_columns=["k"]
+    )
     path = cat._path("wide")
+    new = set(after) - _carried(before, after)
     cap = -(-sum(_footer_rows(path, f) for f in after) // spark.sparkContext.defaultParallelism)
-    assert len(after) > 1 and all(_footer_rows(path, f) <= cap for f in after)
+    assert len({f.split("-")[1] for f in new}) > 1  # part-<task>-...: several writers
+    assert all(_footer_rows(path, f) <= cap for f in new)
+
+
+def test_inserts_past_every_key_keep_the_file_count_bounded(spark, base):
+    """Batches of keys above every stored key fold into the tail file
+    rather than each adding a file of its own: a file split from the
+    tail holds about half the cap or more."""
+    cat = _copy(base, spark, "tail")
+    path = cat._path("tail")
+    start = len(_files(path))
+    want = _rows(cat.get("tail"))
+    for i in range(16):
+        batch = _batch(spark, 1000 + 10 * i, 1010 + 10 * i)
+        want += _rows(batch)
+        cat.merge_upsert("tail", batch, ["k"])
+    assert _rows(cat.get("tail")) == sorted(want, key=repr)
+    cap = -(-sum(_footer_rows(path, f) for f in _files(path))
+            // spark.sparkContext.defaultParallelism)
+    assert len(_files(path)) - start <= 2 * 160 / cap + 1
 
 
 @pytest.mark.parametrize("crash", ["link", "aside", "into_place", "cleanup"])
